@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 
 /** Plan-lineage truncation for iterative / reused intermediates.
   *
@@ -69,9 +70,61 @@ object Lineage {
     * extern/re-encode of the frame — the fixed-point loops apply it to
     * COMMUNITY-sized frames, never the full graph.
     */
-  def truncateFresh(df: DataFrame): DataFrame = {
+  private def truncateFresh(df: DataFrame): DataFrame = {
     val cp = truncate(df)
     cp.sparkSession.createDataFrame(cp.rdd, cp.schema)
+  }
+
+  /** The boolean column a probed pass flags its changed rows with. */
+  val Changed = "chg"
+
+  /** The pass loop every iterative operator runs: up to `passes`
+    * applications of `step(state, pass)` (pass counts from 1) to `init`,
+    * which is returned as is when `passes <= 0`. The combinator owns the
+    * per-pass policy, so call sites only write the pass body:
+    *
+    *   - materialization: each pass output is [[truncate]]d, or with
+    *     `fresh` [[truncateFresh]]d (frames that feed back into their own
+    *     joins across many passes, see its stats note);
+    *   - cadence: `every = 1` materializes every pass, the result
+    *     included. `every = k > 1` materializes only every k-th pass and
+    *     never the last one: for loops whose state is consumed once per
+    *     pass, where a checkpoint only bounds plan depth and would be a
+    *     pure extra job (PageRank), so the result stays lazy;
+    *   - early stop: with `converged`, `step` must flag each changed row in
+    *     a boolean [[Changed]] column. After each pass the flagged rows of
+    *     the materialized output go to `converged` (the site keeps its own
+    *     action: `isEmpty` or `count() == 0`), the flag is dropped, and the
+    *     loop ends on `true`. The final budgeted pass is never probed: its
+    *     answer cannot change anything, so its flag is dropped before
+    *     materialization and the probe job is saved.
+    */
+  def iterate(
+      init: DataFrame,
+      passes: Int,
+      every: Int = 1,
+      fresh: Boolean = false,
+      converged: Option[DataFrame => Boolean] = None
+  )(step: (DataFrame, Int) => DataFrame): DataFrame = {
+    var cur  = init
+    var pass = 0
+    var done = false
+    while (!done && pass < passes) {
+      pass += 1
+      val last = pass == passes
+      val out  = if (converged.isDefined && last) step(cur, pass).drop(Changed) else step(cur, pass)
+      val next =
+        if (every > 1 && (last || pass % every != 0)) out
+        else if (fresh) truncateFresh(out)
+        else truncate(out)
+      converged.filter(_ => !last) match {
+        case Some(stop) =>
+          done = stop(next.filter(col(Changed)))
+          cur = next.drop(Changed)
+        case None => cur = next
+      }
+    }
+    cur
   }
 
   /** Cache-based plan pin for loop frames that the caller FORCES
@@ -111,17 +164,6 @@ object Lineage {
     }
   }
 
-  def truncate(df: DataFrame): DataFrame = {
-    if (sys.env.contains("GRAFT_PHASE_DEBUG")) {
-      val t0 = System.nanoTime()
-      val r  = truncateImpl(df)
-      val ph = df.queryExecution.tracker.phases.map { case (k, v) => s"$k=${v.endTimeMs - v.startTimeMs}" }
-      println(f"[phase-debug] truncate total=${(System.nanoTime() - t0) / 1e6}%.0f ms  ${ph.mkString(" ")}")
-      return r
-    }
-    truncateImpl(df)
-  }
-
   /** True when `df` is nothing but an attribute-only projection (column
     * pruning/reordering, no computed expressions) over an ALREADY
     * materialized leaf (a prior checkpoint's LogicalRDD or an in-memory
@@ -156,7 +198,7 @@ object Lineage {
     walk(df.queryExecution.analyzed)
   }
 
-  private def truncateImpl(df: DataFrame): DataFrame = {
+  def truncate(df: DataFrame): DataFrame = {
     if (alreadyMaterialized(df)) return df
     captureIfEnabled(df)
     val spark = df.sparkSession

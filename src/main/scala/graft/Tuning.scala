@@ -64,9 +64,9 @@ object Tuning {
     * serialize computes) could interleave their save/restore and one
     * thread's "saved" values would be the other's IN-PROFILE values —
     * permanently leaving shuffle.partitions=1 and codegen off for the
-    * session. The monitor is reentrant, so a profiled compute that calls
-    * another profiled compute on the same thread (the g8c→g8e chains) just
-    * saves and restores the already-profiled values — a no-op. No caller
+    * session. The monitor is reentrant, so a profiled compute may call
+    * another profiled compute on the same thread (the g8c→g8e chains): a
+    * nested profile overrides its confs and restores them on exit. No caller
     * runs concurrent queries UNDER the profile anymore (the g8d
     * future-based overlap was replaced by the batched disjoint-union
     * ladder in r12), so serializing profiled sections costs nothing.
@@ -80,8 +80,8 @@ object Tuning {
     * passes): single-partition shuffles + no AQE, codegen kept on — see
     * [[FrontierConfs]] for why this is scale-safe for exactly these loops.
     * Same exclusive save/set/run/restore monitor as
-    * [[dimensionGraphProfile]] (reentrant, so nesting either profile on
-    * one thread is a no-op).
+    * [[dimensionGraphProfile]] (reentrant; a nested profile overrides its
+    * confs and restores them on exit).
     */
   def boundedFrontierProfile[T](spark: SparkSession)(f: => T): T =
     withConfs(spark, FrontierConfs)(f)

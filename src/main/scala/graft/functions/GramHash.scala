@@ -241,9 +241,12 @@ object GramHash {
     * most ONCE even if the progression revisits it), matching the
     * spelled-out `transform(sequence(0, 63), i -> CASE WHEN
     * array_contains(flips, i) THEN 1 - bits[i] ELSE bits[i] END)` template.
+    * The template always yields 64 elements, so any other input length is
+    * rejected rather than silently diverging from it.
     */
   def flipBits(bits: ArrayData, f: Int, fstart: Long, fstep: Long): ArrayData = {
-    val n    = bits.numElements()
+    val n = bits.numElements()
+    require(n == 64, s"graft_flip_bits needs a 64-element bit array, got $n elements")
     var mask = 0L
     var j    = 0
     while (j < f) {
@@ -255,7 +258,7 @@ object GramHash {
     var i   = 0
     while (i < n) {
       val bit = bits.getLong(i)
-      out(i) = if (i < 64 && ((mask >>> i) & 1L) == 1L) 1L - bit else bit
+      out(i) = if (((mask >>> i) & 1L) == 1L) 1L - bit else bit
       i += 1
     }
     new GenericArrayData(out)

@@ -411,6 +411,38 @@ object GraphOps {
       .agg(sum(col("w")).as("deg"))
   )
 
+  /** The pass driver both label fixed points share ([[mergeFixedPointCore]]
+    * and [[refineWithinCore]]): `onePass(state, withChg)` applied up to
+    * `maxPasses` times, stopping at the first pass that relabels nothing.
+    *
+    * Every pass is truncateFresh'd, not truncated: the label frame feeds
+    * back into the next pass, and plain checkpoints carry the source
+    * plan's size-in-bytes forward — compounding doubly-exponentially
+    * across passes until the OPTIMIZER hangs in BigInteger math (see
+    * Lineage.truncateFresh). The stats reset costs one re-encode of a
+    * community-sized frame per pass. (Composing several passes into one
+    * planned job was MEASURED and rejected: each pass references its state
+    * plan several times — xa, xb, the relabel join — so a k-pass plan tree
+    * grows ~5^k; 4 unrolled refine passes produced 2341-stage jobs. The
+    * checkpoint-per-pass discipline is the floor.)
+    *
+    * Convergence is a limit-1 scan (`isEmpty`) of the relabel flag on the
+    * frame the pass materialized anyway, instead of the old separate picks
+    * materialization + emptiness probe (4 actions/pass → 2, r11 #2). The
+    * probe is skipped on the FINAL budgeted pass (its answer cannot change
+    * anything) and entirely under probe=false — callers whose pass budget
+    * is pinned to an unrolled oracle run exactly maxPasses passes either
+    * way (a converged pass is a no-op), and each skipped probe saves one
+    * driver-planned job.
+    */
+  private def labelFixedPoint(init: DataFrame, maxPasses: Int, probe: Boolean)(
+      onePass: (DataFrame, Boolean) => DataFrame): DataFrame =
+    Lineage
+      .iterate(init, maxPasses, fresh = true, converged = if (probe) Some(_.isEmpty) else None) {
+        (state, _) => onePass(state, probe)
+      }
+      .select(col("id"), col("lbl"))
+
   private def mergeFixedPointCore(
       u: DataFrame, // (a, b, w, gm) — materialized; w ≡ 1 for unweighted
       labels: DataFrame,
@@ -429,7 +461,7 @@ object GraphOps {
     // Loop state carries the pass-invariant vertex degree so the community
     // degree sum is ONE window per pass, not an aggregate + two joins
     // (edgeless vertices coalesce to 0 — they never appear in inter).
-    var cur = Lineage.truncate(
+    val init = Lineage.truncate(
       labels
         .select(col("id"), col("lbl"))
         .join(deg, Seq("id"), "left")
@@ -490,42 +522,13 @@ object GraphOps {
             col("id"),
             coalesce(col("new_lbl"), col("lbl")).as("lbl"),
             col("deg")
-          ) ++ (if (withChg) Seq(col("new_lbl").isNotNull.as("chg")) else Nil): _*
+          ) ++ (if (withChg) Seq(col("new_lbl").isNotNull.as(Lineage.Changed)) else Nil): _*
         )
     }
-    // truncateFresh, not truncate, at every checkpoint unit: the label
-    // frame feeds back into the next unit, and plain checkpoints carry the
-    // source plan's size-in-bytes forward — compounding doubly-
-    // exponentially across passes until the OPTIMIZER hangs in BigInteger
-    // math (see Lineage.truncateFresh). The stats reset costs one
-    // re-encode of a community-sized frame per pass. (Composing several
-    // passes into one planned job was MEASURED and rejected: each pass
-    // references its state plan several times — xa, xb, the relabel join —
-    // so a k-pass plan tree grows ~5^k; 4 unrolled refine passes produced
-    // 2341-stage jobs. The checkpoint-per-pass discipline is the floor.)
-    //
-    // Convergence rides the relabel flag: a limit-1 scan of the frame the
-    // unit materialized anyway, instead of the old separate picks
-    // materialization + emptiness probe (4 actions/pass → 2, r11 #2).
-    // No mutual pair ⇔ no positive-gain pick (the max-gain pick is always
-    // mutual — see the PROGRESSING note above). The probe is skipped on
-    // the FINAL budgeted unit (its answer cannot change anything) and
-    // entirely under probe=false — callers whose pass budget is pinned
-    // to an unrolled oracle run exactly maxPasses passes either way
-    // (a converged pass is a no-op), and each skipped probe saves one
-    // driver-planned job.
-    var pass = 0
-    var done = false
-    while (!done && pass < maxPasses) {
-      val doProbe = probe && pass + 1 < maxPasses
-      val next    = Lineage.truncateFresh(onePass(cur, withChg = doProbe))
-      done = if (doProbe) next.filter(col("chg")).isEmpty else false
-      cur = if (doProbe) next.drop("chg") else next
-      pass += 1
-    }
-    if (sys.env.contains("GRAFT_PASS_DEBUG"))
-      println(s"[pass-debug] merge: ran $pass of $maxPasses (done=$done)")
-    cur.select(col("id"), col("lbl"))
+    // Convergence rides the relabel flag: no mutual pair ⇔ no
+    // positive-gain pick (the max-gain pick is always mutual — see the
+    // PROGRESSING note above).
+    labelFixedPoint(init, maxPasses, probe)(onePass)
   }
 
   /** The LEIDEN REFINEMENT PHASE (Traag–Waltman–van Eck 2019, the step
@@ -651,7 +654,7 @@ object GraphOps {
     // materializations per pass under AQE. An edgeless vertex has no deg
     // row — coalesce to 0 (its singleton sub-community never appears in
     // the inter frame, so it can never merge either way).
-    var cur = Lineage.truncate(
+    val init = Lineage.truncate(
       par
         .join(deg, Seq("id"), "left")
         .join(psz, "parent")
@@ -767,31 +770,14 @@ object GraphOps {
             col("parent"),
             col("deg"),
             col("psz")
-          ) ++ (if (withChg) Seq(col("new_lbl").isNotNull.as("chg")) else Nil): _*
+          ) ++ (if (withChg) Seq(col("new_lbl").isNotNull.as(Lineage.Changed)) else Nil): _*
         )
     }
-    // Convergence rides the relabel flag (limit-1 over the frame the unit
-    // materialized anyway): loop ends at the first unit whose LAST pass
-    // applied NO mutual pair — under the gate the max-gain pick is still
-    // mutual whenever any gain survives, but reading the applied frame
-    // directly is the guard that cannot hang. The probe is skipped on the
-    // FINAL budgeted unit (its answer cannot change anything) and entirely
-    // under probe=false — callers whose pass budget is pinned to an
-    // unrolled oracle run exactly maxPasses passes either way (a converged
-    // pass is a no-op). Passes are checkpointed one at a time — see
-    // mergeFixedPointCore's note on why unrolling explodes the plan.
-    var pass = 0
-    var done = false
-    while (!done && pass < maxPasses) {
-      val doProbe = probe && pass + 1 < maxPasses
-      val next    = Lineage.truncateFresh(onePass(cur, withChg = doProbe))
-      done = if (doProbe) next.filter(col("chg")).isEmpty else false
-      cur = if (doProbe) next.drop("chg") else next
-      pass += 1
-    }
-    if (sys.env.contains("GRAFT_PASS_DEBUG"))
-      println(s"[pass-debug] refine: ran $pass of $maxPasses (done=$done)")
-    cur.select(col("id"), col("lbl"))
+    // Convergence rides the relabel flag: the loop ends at the first pass
+    // that applied NO mutual pair — under the gate the max-gain pick is
+    // still mutual whenever any gain survives, but reading the applied
+    // frame directly is the guard that cannot hang.
+    labelFixedPoint(init, maxPasses, probe)(onePass)
   }
 
   /** Resolution-parameterized community hierarchy — the Spark-native form
@@ -874,13 +860,30 @@ object GraphOps {
   ): DataFrame = {
     // materialize the edge list FIRST: callers pass distinct()/union-heavy
     // plans, and both the degree aggregate and the degree-annotated join
-    // below consume it — untruncated, that plan runs twice.
+    // consume it — untruncated, that plan runs twice.
     val ed = Lineage.truncate(edges.select(col("src"), col("dst")))
-    // Out-degree is consumed exactly once (the annotation join below), so
-    // it stays LAZY over the checkpointed edge frame — a second checkpoint
-    // of a one-consumer aggregate is a pure extra job (r16 fold).
-    val outDeg = ed.groupBy(col("src")).agg(count(lit(1)).as("od"))
-    // Pre-partition the degree-annotated edge frame by src BEFORE the
+    rankPasses(ed, "1", vertexIds.select(col("id"), lit(scale).as("r")), iterations)(
+      globalTeleport(vertexIds, scale))
+  }
+
+  /** The pass loop every quantized PageRank shares: `iterations` rounds of
+    *
+    *   rₜ = teleport(Σᵤ→ᵥ (rₜ₋₁(u)·w) div strength(u))
+    *
+    * over the materialized edges `ed`, with w = the SQL expression
+    * `weight` over an edge row and strength = Σ out-weights. The
+    * unweighted forms pass the literal "1", for which (r·1) div Σ1 = r div
+    * outdeg — the same integers, with no weight column stored.
+    * `teleport` turns the per-vertex sum frame (id, s) into the next rank
+    * frame (id, r).
+    */
+  private def rankPasses(ed: DataFrame, weight: String, r0: DataFrame, iterations: Int)(
+      teleport: DataFrame => DataFrame): DataFrame = {
+    // Strength is consumed exactly once (the annotation join below), so it
+    // stays LAZY over the checkpointed edge frame — a second checkpoint of
+    // a one-consumer aggregate is a pure extra job (r16 fold).
+    val strength = ed.groupBy(col("src")).agg(sum(expr(weight)).as("sw"))
+    // Pre-partition the strength-annotated edge frame by src BEFORE the
     // truncation: checkpointed frames keep their partitioning, so when the
     // rank side outgrows broadcast (the cluster-scale regime) each pass's
     // contrib join finds the invariant edge bulk already hash-distributed
@@ -888,31 +891,31 @@ object GraphOps {
     // rank side still broadcasts (measured at ≤16× sf0.1) the edge side
     // streams shuffle-free either way — the pre-partition is the shape
     // that stays right past that point.
-    val e = Lineage.truncate(ed.join(outDeg, "src").repartition(col("src")))
+    val e = Lineage.truncate(ed.join(strength, "src").repartition(col("src")))
     // Each pass consumes the previous rank frame exactly ONCE (the contrib
     // join), so per-pass truncation would only pay a materialization job
     // without preventing any recompute — shuffle-stage boundaries already
     // bound retry cost. (Contrast labelPropagation, whose labels fan out
     // 3× per pass and MUST truncate.) Truncate every 5th pass purely to
     // bound plan depth for deep iteration counts.
-    var r = vertexIds.select(col("id"), lit(scale).as("r"))
-    (1 to iterations).foreach { i =>
-      val contrib = e
-        .join(r, e("src") === r("id"))
-        .select(e("dst").as("id"), expr("r div od").as("c"))
-        .groupBy("id")
-        .agg(sum(col("c")).as("s"))
-      val next = vertexIds
-        .join(contrib, Seq("id"), "left")
-        .select(
-          col("id"),
-          (lit(15L * scale / 100) +
-            expr(s"(85 * coalesce(s, 0)) div 100")).as("r")
-        )
-      r = if (i % 5 == 0 && i < iterations) Lineage.truncate(next) else next
+    Lineage.iterate(r0, iterations, every = 5) { (r, _) =>
+      teleport(
+        e.join(r, e("src") === r("id"))
+          .select(e("dst").as("id"), expr(s"(r * $weight) div sw").as("c"))
+          .groupBy("id")
+          .agg(sum(col("c")).as("s")))
     }
-    r
   }
+
+  /** Global PageRank's rank update: every vertex gets the teleport floor
+    * plus the damped contribution sum (absent sum = 0).
+    */
+  private def globalTeleport(vertexIds: DataFrame, scale: Long)(contrib: DataFrame): DataFrame =
+    vertexIds
+      .join(contrib, Seq("id"), "left")
+      .select(
+        col("id"),
+        (lit(15L * scale / 100) + expr("(85 * coalesce(s, 0)) div 100")).as("r"))
 
   /** Fixed-iteration HITS (Kleinberg 1999) with INTEGER-QUANTIZED
     * arithmetic and per-pass L∞ normalization, so hub/authority scores are
@@ -1007,26 +1010,8 @@ object GraphOps {
       scale: Long = 1000000L
   ): DataFrame = {
     val ed = Lineage.truncate(edges.select(col("src"), col("dst"), col("w")))
-    // one consumer — lazy over the checkpointed edges, like pageRankQuantized
-    val strength = ed.groupBy(col("src")).agg(sum(col("w")).as("sw"))
-    val e = Lineage.truncate(ed.join(strength, "src").repartition(col("src")))
-    var r = vertexIds.select(col("id"), lit(scale).as("r"))
-    (1 to iterations).foreach { i =>
-      val contrib = e
-        .join(r, e("src") === r("id"))
-        .select(e("dst").as("id"), expr("(r * w) div sw").as("c"))
-        .groupBy("id")
-        .agg(sum(col("c")).as("s"))
-      val next = vertexIds
-        .join(contrib, Seq("id"), "left")
-        .select(
-          col("id"),
-          (lit(15L * scale / 100) +
-            expr(s"(85 * coalesce(s, 0)) div 100")).as("r")
-        )
-      r = if (i % 5 == 0 && i < iterations) Lineage.truncate(next) else next
-    }
-    r
+    rankPasses(ed, "w", vertexIds.select(col("id"), lit(scale).as("r")), iterations)(
+      globalTeleport(vertexIds, scale))
   }
 
   /** Personalized PageRank, integer-quantized, SPARSE: teleport mass goes
@@ -1052,23 +1037,13 @@ object GraphOps {
       scale: Long = 1000000L,
       epsilon: Long = 0L
   ): DataFrame = {
-    // see pageRankQuantized: truncate the edge plan once, consume it twice,
-    // and pre-partition it by src so that past the broadcast regime each
-    // pass redistributes only the rank frame — which for the ε-truncated
-    // variant is the FRONTIER-BOUNDED side
+    // see pageRankQuantized: truncate the edge plan once, consume it twice;
+    // rankPasses pre-partitions it by src so that past the broadcast
+    // regime each pass redistributes only the rank frame — which for the
+    // ε-truncated variant is the FRONTIER-BOUNDED side
     val ed = Lineage.truncate(edges.select(col("src"), col("dst")))
-    val outDeg = ed.groupBy(col("src")).agg(count(lit(1)).as("od"))
-    val e  = Lineage.truncate(ed.join(outDeg, "src").repartition(col("src")))
     val tp = Lineage.truncate(seeds.select(col("id"), lit(15L * scale / 100).as("tp")))
-    // no per-pass truncation: the rank frame is consumed once per pass;
-    // depth-bounding truncate every 5th (see pageRankQuantized)
-    var r = tp.select(col("id"), lit(scale).as("r"))
-    (1 to iterations).foreach { i =>
-      val contrib = e
-        .join(r, e("src") === r("id"))
-        .select(e("dst").as("id"), expr("r div od").as("c"))
-        .groupBy("id")
-        .agg(sum(col("c")).as("s"))
+    rankPasses(ed, "1", tp.select(col("id"), lit(scale).as("r")), iterations) { contrib =>
       val merged = tp
         .join(contrib, Seq("id"), "full_outer")
         .select(
@@ -1085,10 +1060,8 @@ object GraphOps {
       // biasing tail ranks low — seeds and near-seed mass (≥ teleport floor)
       // always survive, so head ranks are exact for any ε below it. ε = 0
       // (default) is the exact frontier-sparse form.
-      val next = if (epsilon > 0L) merged.filter(col("r") >= epsilon) else merged
-      r = if (i % 5 == 0 && i < iterations) Lineage.truncate(next) else next
+      if (epsilon > 0L) merged.filter(col("r") >= epsilon) else merged
     }
-    r
   }
 
   /** Synchronous label propagation (fixed iteration count, fully
@@ -1119,9 +1092,8 @@ object GraphOps {
         .distinct()
     )
 
-    var labels =
-      Lineage.truncate(vertexIds.select(col("id"), col("id").as("lbl")))
-    (1 to iterations).foreach { _ =>
+    val labels0 = Lineage.truncate(vertexIds.select(col("id"), col("id").as("lbl")))
+    Lineage.iterate(labels0, iterations) { (labels, _) =>
       val neigh = sym
         .join(labels, sym("dst") === labels("id"))
         .select(sym("src").as("id"), col("lbl"))
@@ -1134,13 +1106,10 @@ object GraphOps {
         .withColumn("rn", org.apache.spark.sql.functions.row_number().over(w))
         .filter(col("rn") === 1)
         .select(col("id"), col("lbl").as("new_lbl"))
-      labels = Lineage.truncate(
-        labels
-          .join(picked, Seq("id"), "left")
-          .select(col("id"), coalesce(col("new_lbl"), col("lbl")).as("lbl"))
-      )
+      labels
+        .join(picked, Seq("id"), "left")
+        .select(col("id"), coalesce(col("new_lbl"), col("lbl")).as("lbl"))
     }
-    labels
   }
 
   /** Deterministic multi-level community hierarchy — the Spark-native form
@@ -1208,8 +1177,7 @@ object GraphOps {
     * cost is non-increasing. Returns the surviving edge list.
     */
   def kCorePeel(und: DataFrame, k: Int, passes: Int): DataFrame = {
-    var e = Lineage.truncate(und.select(col("a"), col("b")))
-    (1 to passes).foreach { _ =>
+    Lineage.iterate(Lineage.truncate(und.select(col("a"), col("b"))), passes) { (e, _) =>
       val keep = e
         .select(col("a").as("v"))
         .unionAll(e.select(col("b").as("v")))
@@ -1217,13 +1185,10 @@ object GraphOps {
         .agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k)
         .select("v")
-      e = Lineage.truncate(
-        e.join(keep.select(col("v").as("a")), Seq("a"), "left_semi")
-          .join(keep.select(col("v").as("b")), Seq("b"), "left_semi")
-          .select(col("a"), col("b"))
-      )
+      e.join(keep.select(col("v").as("a")), Seq("a"), "left_semi")
+        .join(keep.select(col("v").as("b")), Seq("b"), "left_semi")
+        .select(col("a"), col("b"))
     }
-    e
   }
 
   /** Multi-source BFS hop counts: `seeds` is `(id, hop)` (hop 0 at the
@@ -1240,16 +1205,12 @@ object GraphOps {
     * undirected reachability.
     */
   def bfsHops(seeds: DataFrame, edges: DataFrame, passes: Int): DataFrame = {
-    var hops = Lineage.truncate(seeds.select(col("id"), col("hop")))
-    (1 to passes).foreach { _ =>
+    Lineage.iterate(Lineage.truncate(seeds.select(col("id"), col("hop"))), passes) { (hops, _) =>
       val relaxed = edges
         .join(hops, edges("src") === hops("id"))
         .select(edges("dst").as("id"), (col("hop") + 1).as("hop"))
-      hops = Lineage.truncate(
-        hops.unionByName(relaxed).groupBy("id").agg(min("hop").as("hop"))
-      )
+      hops.unionByName(relaxed).groupBy("id").agg(min("hop").as("hop"))
     }
-    hops
   }
 
   /** Per-seed BFS hop counts — [[bfsHops]] with seed identity: `seeds` is
@@ -1263,16 +1224,13 @@ object GraphOps {
     * one equi-join on src + one (seed, id) min aggregate, lineage truncated.
     */
   def seededHops(seeds: DataFrame, edges: DataFrame, passes: Int): DataFrame = {
-    var hops = Lineage.truncate(seeds.select(col("seed"), col("id"), col("hop")))
-    (1 to passes).foreach { _ =>
+    val hops0 = Lineage.truncate(seeds.select(col("seed"), col("id"), col("hop")))
+    Lineage.iterate(hops0, passes) { (hops, _) =>
       val relaxed = edges
         .join(hops, edges("src") === hops("id"))
         .select(col("seed"), edges("dst").as("id"), (col("hop") + 1).as("hop"))
-      hops = Lineage.truncate(
-        hops.unionByName(relaxed).groupBy("seed", "id").agg(min("hop").as("hop"))
-      )
+      hops.unionByName(relaxed).groupBy("seed", "id").agg(min("hop").as("hop"))
     }
-    hops
   }
 
   /** Per-seed BFS with SHORTEST-PATH COUNTS — [[seededHops]] extended with
@@ -1434,17 +1392,17 @@ object GraphOps {
         .distinct()
     )
 
-    var labels =
-      Lineage.truncate(vertexIds.select(col("id"), col("id").as("comp")))
-    var iter      = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
+    // Convergence: a pass with zero changed labels. The probe keeps
+    // count(), not isEmpty: on an all-false converged pass the limit-1
+    // scan scales up partition by partition and can cost two jobs.
+    val labels0 = Lineage.truncate(vertexIds.select(col("id"), col("id").as("comp")))
+    Lineage.iterate(labels0, maxIter, converged = Some(_.count() == 0)) { (labels, _) =>
       val msgs = sym
         .join(labels, sym("src") === labels("id"))
         .select(sym("dst").as("id"), col("comp"))
       // fused convergence: each vertex's previous label rides along as `old`
       // (exactly one non-null per id — min ignores nulls), so the changed
-      // count is a scan of the materialized pass output, not a second join
+      // flag is a scan of the materialized pass output, not a second join
       val prop = labels
         .select(col("id"), col("comp"), col("comp").as("old"))
         .unionByName(msgs.withColumn("old", lit(null).cast(msgs.schema("comp").dataType)))
@@ -1454,16 +1412,9 @@ object GraphOps {
       // present in `prop` (labels covers all ids; min only ever picks ids),
       // so the inner equi-join is total.
       val parents = prop.select(col("comp").as("pcomp"), col("id").as("comp"))
-      val next = Lineage.truncate(
-        prop
-          .join(parents, Seq("comp"))
-          .select(col("id"), col("pcomp").as("comp"), col("old"))
-      )
-      val changed = next.filter(col("comp") =!= col("old")).count()
-      labels = next.drop("old")
-      converged = changed == 0
-      iter += 1
+      prop
+        .join(parents, Seq("comp"))
+        .select(col("id"), col("pcomp").as("comp"), (col("pcomp") =!= col("old")).as(Lineage.Changed))
     }
-    labels
   }
 }

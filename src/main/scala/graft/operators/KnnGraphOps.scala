@@ -192,18 +192,28 @@ object KnnGraphOps {
       .select(col("vec_id"))
       .orderBy(substring(md5(col("vec_id").cast("string")), 1, 8).asc, col("vec_id").asc)
       .limit(1)
-    var beam = graft.Lineage.truncate(score(entry))
-    (1 to passes).foreach { _ =>
-      val cand = beam
+    beamSearch(graft.Lineage.truncate(score(entry)), edges, k, passes, score)
+  }
+
+  /** `passes` beam passes from the scored start beam (vec_id, sim_q), each
+    * materialized: expand the beam's neighbors in `nbrs` (u, v), score
+    * beam ∪ neighbors via `scorer` (ids → (vec_id, sim_q)), keep the
+    * top-`width` by (sim_q desc, vec_id asc). `passes = 0` returns `beam`.
+    */
+  def beamSearch(
+      beam: DataFrame,
+      nbrs: DataFrame,
+      width: Int,
+      passes: Int,
+      scorer: DataFrame => DataFrame): DataFrame =
+    graft.Lineage.iterate(beam, passes) { (b, _) =>
+      val cand = b
         .select(col("vec_id"))
         .unionByName(
-          edges
-            .join(broadcast(beam.select(col("vec_id").as("u"))), Seq("u"))
+          nbrs
+            .join(broadcast(b.select(col("vec_id").as("u"))), Seq("u"))
             .select(col("v").as("vec_id")))
         .distinct()
-      beam = graft.Lineage.truncate(
-        score(cand).orderBy(col("sim_q").desc, col("vec_id").asc).limit(k))
+      scorer(cand).orderBy(col("sim_q").desc, col("vec_id").asc).limit(width)
     }
-    beam
-  }
 }

@@ -1588,11 +1588,11 @@ object Curation extends QueryModule {
         .join(wins, Seq("p"), "left")
         .select(col("p"), col("games"), coalesce(col("wins"), lit(0L)).as("wins"))
     )
-    var r = graft.Lineage.truncate(perPlayer.select(col("p"), lit(1000000L).as("r")))
-    (1 to 3).foreach { _ =>
+    val r0 = graft.Lineage.truncate(perPlayer.select(col("p"), lit(1000000L).as("r")))
+    val r = graft.Lineage.iterate(r0, 3) { (prev, _) =>
       val denom = games
-        .join(r.select(col("p").as("i"), col("r").as("ri")), "i")
-        .join(r.select(col("p").as("j"), col("r").as("rj")), "j")
+        .join(prev.select(col("p").as("i"), col("r").as("ri")), "i")
+        .join(prev.select(col("p").as("j"), col("r").as("rj")), "j")
         .groupBy(col("i").as("p"))
         .agg(sum(expr(
           "(cast(g as decimal(38,0)) * 1000000) div greatest(ri + rj, 1)")).as("dq"))
@@ -1608,10 +1608,8 @@ object Curation extends QueryModule {
       // lattice floor 1 keeps the (empty) projection well-typed.
       val mx = Option(raw.agg(max(col("r"))).head.getAs[java.lang.Long](0))
         .map(_.longValue).getOrElse(1L)
-      r = graft.Lineage.truncate(
-        raw.select(col("p"),
-          expr(s"(cast(r as decimal(38,0)) * 1000000) div greatest(${mx}L, 1)").as("r"))
-      )
+      raw.select(col("p"),
+        expr(s"(cast(r as decimal(38,0)) * 1000000) div greatest(${mx}L, 1)").as("r"))
     }
     perPlayer
       .join(r, "p")

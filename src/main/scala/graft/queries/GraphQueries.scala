@@ -1422,8 +1422,8 @@ object GraphQueries extends QueryModule {
     * passes). Rows with id ≥ 20000 are exactly the nation copy's merge
     * fixed point — level 0's are the a4_nation labels g4/g5 consume.
     *
-    * probe=false, MEASURED (r14): with GRAFT_PASS_DEBUG every probed pass
-    * reports done=false — the γ ladder keeps finding positive-gain merges
+    * probe=false, MEASURED (r14): every probed pass reported
+    * done=false — the γ ladder keeps finding positive-gain merges
     * through the full budget on these graphs, so convergence early-exit
     * never fires and the probe jobs are pure overhead.
     */
@@ -1616,7 +1616,7 @@ object GraphQueries extends QueryModule {
           row_number().over(Window.partitionBy(col("src")).orderBy(col("dst"))) - 1
         )
     )
-    var walks = graft.Lineage.truncate(
+    val starts = graft.Lineage.truncate(
       sym
         .select(col("src"))
         .distinct()
@@ -1626,21 +1626,19 @@ object GraphQueries extends QueryModule {
           concat(lit("s"), col("src").cast("string")).as("path")
         )
     )
-    (1 to 4).foreach { i =>
-      walks = graft.Lineage.truncate(
-        walks
-          .join(nbr, walks("cur") === nbr("src"))
-          .filter(
-            col("rk") === expr(
-              s"cast(conv(substring(md5(concat(cast(start as string), '|', cast(cur as string), '|', '$i')), 1, 6), 16, 10) as bigint) % deg"
-            )
+    val walks = graft.Lineage.iterate(starts, 4) { (prev, i) =>
+      prev
+        .join(nbr, prev("cur") === nbr("src"))
+        .filter(
+          col("rk") === expr(
+            s"cast(conv(substring(md5(concat(cast(start as string), '|', cast(cur as string), '|', '$i')), 1, 6), 16, 10) as bigint) % deg"
           )
-          .select(
-            col("start"),
-            nbr("dst").as("cur"),
-            concat(col("path"), lit(">s"), nbr("dst").cast("string")).as("path")
-          )
-      )
+        )
+        .select(
+          col("start"),
+          nbr("dst").as("cur"),
+          concat(col("path"), lit(">s"), nbr("dst").cast("string")).as("path")
+        )
     }
     walks.select(
       col("start").cast("long").as("start"),

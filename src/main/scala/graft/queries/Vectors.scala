@@ -790,11 +790,12 @@ object Vectors extends QueryModule {
   private def scoreAgainstQuery(s: SparkSession, d: String): DataFrame => DataFrame =
     scoreAgainstVec(s, d, queryQq(s, d))
 
-  /** One batched beam pass over a TAG-PARTITIONED frontier frame
-    * (tag, vec_id, sim_q): expand every tag's beam through `nbrs`, score
-    * the tagged candidate union in ONE broadcast join against the corpus
-    * (`sim` = the per-row score expression, which may branch on
-    * col("tag")), keep each tag's top-`width` by (sim_q desc, vec_id asc).
+  /** `passes` batched beam passes over a TAG-PARTITIONED frontier frame
+    * (tag, vec_id, sim_q), each materialized: expand every tag's beam
+    * through `nbrs`, score the tagged candidate union in ONE broadcast join
+    * against the corpus (`sim` = the per-row score expression, which may
+    * branch on col("tag")), keep each tag's top-`width` by (sim_q desc,
+    * vec_id asc).
     * Exactly equivalent to running the per-tag chains separately — tags
     * never interact (cand, window rank and cut are all per-tag), and the
     * per-tag window cut equals the solo chain's orderBy+limit because
@@ -803,16 +804,20 @@ object Vectors extends QueryModule {
     * "fold passes into tagged union frames" batching; cuts s19o's pass
     * jobs 10→5 and s19m's 12→7).
     */
-  private def taggedBeamPass(emb: DataFrame, nbrs: DataFrame, sim: Column, width: Int)(
-      state: DataFrame): DataFrame = {
-    val cand = state
-      .select(col("tag"), col("vec_id"))
-      .unionByName(
-        nbrs
-          .join(broadcast(state.select(col("tag"), col("vec_id").as("u"))), Seq("u"))
-          .select(col("tag"), col("v").as("vec_id")))
-      .distinct()
-    graft.Lineage.truncate(
+  private def taggedBeamSearch(
+      emb: DataFrame,
+      nbrs: DataFrame,
+      sim: Column,
+      width: Int,
+      passes: Int)(init: DataFrame): DataFrame =
+    graft.Lineage.iterate(init, passes) { (state, _) =>
+      val cand = state
+        .select(col("tag"), col("vec_id"))
+        .unionByName(
+          nbrs
+            .join(broadcast(state.select(col("tag"), col("vec_id").as("u"))), Seq("u"))
+            .select(col("tag"), col("v").as("vec_id")))
+        .distinct()
       emb
         .join(broadcast(cand), Seq("vec_id"))
         .select(col("tag"), col("vec_id"), sim.as("sim_q"))
@@ -821,24 +826,8 @@ object Vectors extends QueryModule {
           row_number().over(
             Window.partitionBy(col("tag")).orderBy(col("sim_q").desc, col("vec_id").asc)))
         .filter(col("rn") <= width)
-        .drop("rn"))
-  }
-
-  /** One truncated beam pass: expand `beam`'s neighbors in `nbrs`, score
-    * beam ∪ neighbors via `scorer`, keep the top-`width`.
-    */
-  private def beamPassWith(nbrs: DataFrame, width: Int, scorer: DataFrame => DataFrame)(
-      beam: DataFrame): DataFrame = {
-    val cand = beam
-      .select(col("vec_id"))
-      .unionByName(
-        nbrs
-          .join(broadcast(beam.select(col("vec_id").as("u"))), Seq("u"))
-          .select(col("v").as("vec_id")))
-      .distinct()
-    graft.Lineage.truncate(
-      scorer(cand).orderBy(col("sim_q").desc, col("vec_id").asc).limit(width))
-  }
+        .drop("rn")
+    }
 
   private def s19j_graph_beam(s: SparkSession, d: String): DataFrame = {
     val e    = table(s, d, "embeddings")
@@ -855,9 +844,8 @@ object Vectors extends QueryModule {
     // overhead (the r19 anti-scaling diagnosis).
     val scorer = scoreAgainstQuery(s, d)
     val beam = graft.Tuning.boundedFrontierProfile(s) {
-      var b = graft.Lineage.truncate(scorer(entry))
-      (1 to JPasses).foreach { _ => b = beamPassWith(nbrs, K, scorer)(b) }
-      b
+      graft.operators.KnnGraphOps
+        .beamSearch(graft.Lineage.truncate(scorer(entry)), nbrs, K, JPasses, scorer)
     }
     val exact = s19_knn_cosine(s, d).select(col("vec_id").as("evid"), lit(1L).as("hit"))
     val flagged = beam
@@ -910,10 +898,9 @@ object Vectors extends QueryModule {
       .limit(1)
     val scorer = scoreAgainstQuery(s, d) // one literal-folded qq for all 6 passes
     val beam = graft.Tuning.boundedFrontierProfile(s) { // bounded passes — see s19j
-      var b = graft.Lineage.truncate(scorer(entry))
-      (1 to 2).foreach { _ => b = beamPassWith(nbrs1, K, scorer)(b) } // coarse descent
-      (1 to 4).foreach { _ => b = beamPassWith(nbrs0, K, scorer)(b) } // fine search
-      b
+      val coarse = graft.operators.KnnGraphOps // coarse descent
+        .beamSearch(graft.Lineage.truncate(scorer(entry)), nbrs1, K, 2, scorer)
+      graft.operators.KnnGraphOps.beamSearch(coarse, nbrs0, K, 4, scorer) // fine search
     }
     val exact = s19_knn_cosine(s, d).select(col("vec_id").as("evid"), lit(1L).as("hit"))
     val flagged = beam
@@ -1042,7 +1029,7 @@ object Vectors extends QueryModule {
     // the tag's own query vector via the `when(tag)` branch — then the
     // query tag alone runs its 2 extra passes: 7 (+1 entry)
     // materializations instead of 12 (+2), per-tag results identical
-    // (see taggedBeamPass). The literal qq/dq folds are unchanged.
+    // (see taggedBeamSearch). The literal qq/dq folds are unchanged.
     val e    = table(s, d, "embeddings")
     val qq   = queryQq(s, d)
     val simQ = VF.dot(quantArr(col("embedding")), typedlit(qq)).cast("long")
@@ -1050,16 +1037,13 @@ object Vectors extends QueryModule {
     val sim  = when(col("tag") === "q", simQ).otherwise(simS)
     val (beam, selfBeam) = graft.Tuning.boundedFrontierProfile(s) {
       val e0 = e.join(broadcast(entry), Seq("vec_id"))
-      var state = graft.Lineage.truncate(
+      val state = taggedBeamSearch(e, nbrs, sim, K, JPasses)(graft.Lineage.truncate(
         e0.select(lit("q").as("tag"), col("vec_id"), simQ.as("sim_q"))
-          .unionByName(e0.select(lit("s").as("tag"), col("vec_id"), simS.as("sim_q"))))
-      (1 to JPasses).foreach { _ => state = taggedBeamPass(e, nbrs, sim, K)(state) }
-      val sBeam  = state.filter(col("tag") === "s") // frozen at its 5-pass budget
-      var qState = state.filter(col("tag") === "q")
-      (JPasses + 1 to JInsPasses).foreach { _ =>
-        qState = taggedBeamPass(e, nbrs, sim, K)(qState)
-      }
-      (qState, sBeam)
+          .unionByName(e0.select(lit("s").as("tag"), col("vec_id"), simS.as("sim_q")))))
+      val sBeam = state.filter(col("tag") === "s") // frozen at its 5-pass budget
+      val qBeam = taggedBeamSearch(e, nbrs, sim, K, JInsPasses - JPasses)(
+        state.filter(col("tag") === "q"))
+      (qBeam, sBeam)
     }
     val exact = s19_knn_cosine(s, d).select(col("vec_id").as("evid"), lit(1L).as("hit"))
     val flagged = beam
@@ -1137,16 +1121,16 @@ object Vectors extends QueryModule {
     // the same total order). The per-pass candidate count rides the state
     // as a CUMULATIVE column (nsc), so each snapshot row reads off the
     // already-materialized checkpoint instead of re-executing a lazy
-    // per-pass count plan at result time.
+    // per-pass count plan at result time. pc counts the candidates AFTER
+    // the join with embeddings, so nsc equals the scored candidate-id count
+    // only because every kNN-graph neighbor id exists in `embeddings` (the
+    // graph is built from that table); a graph source with dangling ids
+    // would under-count n_scored.
     val widths = Seq(4L, 8L, 16L)
     val wPart  = Window.partitionBy(col("beam_w"))
     val wRank  = wPart.orderBy(col("sim_q").desc, col("vec_id").asc)
     val snaps = graft.Tuning.boundedFrontierProfile(s) {
-      var state = graft.Lineage.truncate(
-        e.join(broadcast(entry), Seq("vec_id"))
-          .select(col("vec_id"), sim.as("sim_q"), explode(typedlit(widths)).as("beam_w"))
-          .withColumn("nsc", lit(0L)))
-      (1 to 5).flatMap { t =>
+      val pass: (DataFrame, Int) => DataFrame = { (state, _) =>
         val cand = state
           .select(col("beam_w"), col("vec_id"))
           .unionByName(
@@ -1155,20 +1139,25 @@ object Vectors extends QueryModule {
               .select(col("beam_w"), col("v").as("vec_id")))
           .distinct()
         val nsPrev = state.groupBy(col("beam_w")).agg(min(col("nsc")).as("nsc0"))
-        state = graft.Lineage.truncate(
-          e.join(broadcast(cand), Seq("vec_id"))
-            .select(col("beam_w"), col("vec_id"), sim.as("sim_q"))
-            .withColumn("pc", count(lit(1)).over(wPart))
-            .withColumn("rn", row_number().over(wRank))
-            .filter(col("rn") <= col("beam_w"))
-            .join(broadcast(nsPrev), Seq("beam_w"))
-            .select(
-              col("beam_w"),
-              col("vec_id"),
-              col("sim_q"),
-              (col("nsc0") + col("pc")).as("nsc")))
-        if (t != 3 && t != 5) None else Some((t, state))
+        e.join(broadcast(cand), Seq("vec_id"))
+          .select(col("beam_w"), col("vec_id"), sim.as("sim_q"))
+          .withColumn("pc", count(lit(1)).over(wPart))
+          .withColumn("rn", row_number().over(wRank))
+          .filter(col("rn") <= col("beam_w"))
+          .join(broadcast(nsPrev), Seq("beam_w"))
+          .select(
+            col("beam_w"),
+            col("vec_id"),
+            col("sim_q"),
+            (col("nsc0") + col("pc")).as("nsc"))
       }
+      val at3 = graft.Lineage.iterate(
+        graft.Lineage.truncate(
+          e.join(broadcast(entry), Seq("vec_id"))
+            .select(col("vec_id"), sim.as("sim_q"), explode(typedlit(widths)).as("beam_w"))
+            .withColumn("nsc", lit(0L))),
+        3)(pass)
+      Seq(3 -> at3, 5 -> graft.Lineage.iterate(at3, 2)(pass))
     }
     snaps
       .map { case (t, snap) =>
@@ -1232,18 +1221,16 @@ object Vectors extends QueryModule {
     // one literal-folded qq shared by BOTH entry chains (see queryQq).
     // Both chains ride ONE tag-partitioned frame: 5 batched passes
     // (+1 entry materialization) instead of 10 (+2) — per-tag results
-    // identical (see taggedBeamPass).
+    // identical (see taggedBeamSearch).
     val qq  = queryQq(s, d)
     val sim = VF.dot(quantArr(col("embedding")), typedlit(qq)).cast("long")
     val beams = graft.Tuning.boundedFrontierProfile(s) {
-      var state = graft.Lineage.truncate(
+      taggedBeamSearch(e, nbrs, sim, K, JPasses)(graft.Lineage.truncate(
         e.join(broadcast(entryA), Seq("vec_id"))
           .select(lit("a").as("tag"), col("vec_id"), sim.as("sim_q"))
           .unionByName(
             e.join(broadcast(entryB), Seq("vec_id"))
-              .select(lit("b").as("tag"), col("vec_id"), sim.as("sim_q"))))
-      (1 to JPasses).foreach { _ => state = taggedBeamPass(e, nbrs, sim, K)(state) }
-      state
+              .select(lit("b").as("tag"), col("vec_id"), sim.as("sim_q")))))
     }
     val fused = beams
       .select(
@@ -1452,7 +1439,7 @@ object Vectors extends QueryModule {
             round(VF.cosine(col("ei"), col("ej")) * 10000, 0).cast("long").as("sim_q")
           )
       )
-      var sel = graft.Lineage.truncate(
+      val first = graft.Lineage.truncate(
         cand
           .select(
             lit(1L).as("step"),
@@ -1464,7 +1451,8 @@ object Vectors extends QueryModule {
           .orderBy(col("score_q").desc, col("vec_id").asc)
           .limit(1)
       )
-      (2 to K).foreach { t =>
+      // pass p picks step p + 1
+      graft.Lineage.iterate(first, K - 1) { (sel, p) =>
         val ms = sim
           .join(sel.select(col("vec_id").as("j")), "j")
           .groupBy(col("i"))
@@ -1473,7 +1461,7 @@ object Vectors extends QueryModule {
           .join(sel.select(col("vec_id")), Seq("vec_id"), "left_anti")
           .join(ms, cand("vec_id") === ms("i"))
           .select(
-            lit(t.toLong).as("step"),
+            lit(p + 1L).as("step"),
             col("vec_id"),
             col("rel_q"),
             col("maxsim_q"),
@@ -1481,9 +1469,8 @@ object Vectors extends QueryModule {
           )
           .orderBy(col("score_q").desc, col("vec_id").asc)
           .limit(1)
-        sel = graft.Lineage.truncate(sel.unionByName(pick))
-      }
-      sel.orderBy(col("step"))
+        sel.unionByName(pick)
+      }.orderBy(col("step"))
     }
   }
 

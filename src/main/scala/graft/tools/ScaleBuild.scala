@@ -4,8 +4,8 @@ import graft.Engine
 
 /** Dev utility: build Soak's N× key-offset replica of a dataset into a
   * KEPT directory (Soak itself builds into a temp dir it deletes), so the
-  * per-family cost censuses ([[CostCensus]], [[PprFrontier]]) can run
-  * against the same scaled data the soak timings used.
+  * per-family cost census ([[CostCensus]]) can run against the same
+  * scaled data the soak timings used.
   *
   * Usage: `sbt "runMain graft.tools.ScaleBuild <N> <outDir>"` (env
   * SPARK_GRAFT_SF_DIR overrides the 1× source, default /root/testdata/sf0.1).

@@ -150,6 +150,16 @@ class GramHashSpec extends AnyFunSuite with SparkTestBase {
       ).collect())
   }
 
+  test("graft_flip_bits rejects a bit array that is not 64 elements long") {
+    import spark.implicits._
+    val df = Seq(Seq.fill(63)(1L)).toDF("bits")
+    val err = intercept[Exception](df.select(expr("graft_flip_bits(bits, 3, 0L, 1L)")).collect())
+    val msgs = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+    assert(
+      msgs.exists(m => m != null && m.contains("graft_flip_bits needs a 64-element bit array, got 63 elements")),
+      s"unexpected error: $err")
+  }
+
   test("graft_phash_pix equals the m11 pixel template, and m10's perturbed form composes identically") {
     import spark.implicits._
     val df = (Seq(0L, 1L, 63L, 64L, 12345L, 999999L) ++ Seq.tabulate(40)(i => i * 37L))

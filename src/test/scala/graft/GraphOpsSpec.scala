@@ -658,4 +658,22 @@ class GraphOpsSpec extends AnyFunSuite with SparkTestBase {
     assert(wtd(2L) == wtd(3L), "the weight-20 bridge must glue the triangles")
     assert(wtd.values.toSet.size == 1)
   }
+
+  test("seededPaths: σ counts shortest paths exactly on a hand-built diamond, and level-sync never revisits") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    // A—B, A—C, B—D, C—D (undirected diamond) plus tail D—E:
+    // from A: d(B)=d(C)=1 σ=1; d(D)=2 σ=2 (both arms); d(E)=3 σ=2.
+    val und   = Seq(("A", "B"), ("A", "C"), ("B", "D"), ("C", "D"), ("D", "E")).toDF("src", "dst")
+    val edges = und.unionByName(und.select(col("dst").as("src"), col("src").as("dst")))
+    val seeds = Seq("A").toDF("seed").select(col("seed"), col("seed").as("id"))
+    val got = graph.GraphOps
+      .seededPaths(seeds, edges, 4)
+      .collect()
+      .map(r => r.getAs[String]("id") -> (r.getAs[Long]("dist"), r.getAs[Long]("sigma")))
+      .toMap
+    assert(got == Map(
+      "A" -> (0L, 1L), "B" -> (1L, 1L), "C" -> (1L, 1L), "D" -> (2L, 2L), "E" -> (3L, 2L)
+    ), s"got $got")
+  }
 }

@@ -1,0 +1,11 @@
+package org.apache.spark.graft
+
+import org.apache.spark.SparkContext
+
+/** Blocks until Spark's listener bus has delivered every posted event, so a
+  * test listener sees every job that has already run. The bus is
+  * package-private to Spark.
+  */
+object ListenerBusDrain {
+  def apply(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
