@@ -12,8 +12,9 @@ import org.apache.spark.sql.SparkSession
   * every TPC-H scale factor, including the 100 TB target. For those, the
   * per-pass cost is pure fixed overhead, and the dominant term is CODEGEN
   * COMPILATION: every pass's plan hangs off a fresh checkpoint leaf, so
-  * each of its ~15 stages Janino-compiles anew (~40 ms/stage, measured —
-  * ProfileG8d: refineWithin 2.9 s → 1.6 s with interpreted execution).
+  * each of its ~15 stages Janino-compiles anew (~40 ms/stage, measured on
+  * the g8d ladder in commit 0234a7b, which added this profile:
+  * refineWithin 2.9 s → 1.6 s with interpreted execution).
   */
 object Tuning {
 
@@ -26,7 +27,8 @@ object Tuning {
     // the per-pass broadcast-build jobs (48→37 jobs on the g4 sweep
     // prefix) but the replacement single-partition SMJs add interpreted
     // sort+exchange stages (105→113) and the warm chain got SLOWER
-    // (5.67 s → 6.41 s, ProfileSweep round 2). Broadcasts stay.
+    // (5.67 s → 6.41 s, warm round 2; OPTIMIZATION_r20.md:150-162).
+    // Broadcasts stay.
   )
 
   /** The beam/frontier variant of the profile: every EXCHANGE inside a

@@ -16,8 +16,6 @@ import graft.Engine
   *     wedge-join probe rows g6/g17/g18 generate;
   *   - g16/g17/g18 substrate: the same wedge census over the hub-capped
   *     co-occurrence projection (df ≤ 16, ≥ 2 shared parts);
-  *   - g13/g13b: per-pass PPR frontier rows, ε = 0 vs ε = 1000 — whether
-  *     the truncation actually prunes at this density;
   *   - d16: rare-gram anchor-join candidate pairs (the join output the
   *     df ≤ 16 cap + bottom-3 anchors bound);
   *   - m9: Σ C(occupancy, 2) over (block-index, block-hash) buckets — the
@@ -83,48 +81,6 @@ object CostCensus {
     )
     val (w16, od16) = wedges(e0)
     println(s"[census] dir=$dir g16_edges=${e0.count()} g16_wedges=$w16 g16_max_outdeg=$od16")
-
-    // --- g13/g13b PPR frontier census -------------------------------------
-    val base = Engine
-      .table(spark, dir, "lineitem")
-      .select(
-        concat(lit("s:"), col("l_suppkey")).as("src"),
-        concat(lit("p:"), col("l_partkey")).as("dst")
-      )
-      .distinct()
-    val edges = base.unionByName(base.select(col("dst").as("src"), col("src").as("dst")))
-    val seeds = Engine
-      .table(spark, dir, "supplier")
-      .filter(col("s_nationkey") === 0)
-      .select(concat(lit("s:"), col("s_suppkey")).as("id"))
-    val ed     = graft.Lineage.truncate(edges.select(col("src"), col("dst")))
-    val outDeg = ed.groupBy(col("src")).agg(count(lit(1)).as("od"))
-    val e      = graft.Lineage.truncate(ed.join(outDeg, "src").repartition(col("src")))
-    val scale  = 1000000L
-    val tp     = graft.Lineage.truncate(seeds.select(col("id"), lit(15L * scale / 100).as("tp")))
-    Seq(0L, 1000L).foreach { epsilon =>
-      var r = tp.select(col("id"), lit(scale).as("r"))
-      (1 to 3).foreach { i =>
-        val contrib = e
-          .join(r, e("src") === r("id"))
-          .select(e("dst").as("id"), expr("r div od").as("c"))
-          .groupBy("id")
-          .agg(sum(col("c")).as("s"))
-        val merged = tp
-          .join(contrib, Seq("id"), "full_outer")
-          .select(
-            col("id"),
-            (coalesce(col("tp"), lit(0L)) + expr("(85 * coalesce(s, 0)) div 100")).as("r")
-          )
-        val next  = if (epsilon > 0L) merged.filter(col("r") >= epsilon) else merged
-        val total = merged.count()
-        val kept2 = next.count()
-        println(
-          s"[census] dir=$dir ppr eps=$epsilon pass=$i frontier=$total kept=$kept2 pruned=${total - kept2}"
-        )
-        r = graft.Lineage.truncate(next)
-      }
-    }
 
     // --- d16 anchor-join candidate census ---------------------------------
     val docs = Engine.table(spark, dir, "documents")

@@ -100,19 +100,40 @@ class LineageSpec extends AnyFunSuite with SparkTestBase {
     n.get
   }
 
+  // two 4-cliques joined through vertex 4–5, a tail 8–9–10, a detached
+  // pair 20–21 and an isolate 30
+  private val und = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L), (4L, 5L),
+    (5L, 6L), (5L, 7L), (5L, 8L), (6L, 7L), (6L, 8L), (7L, 8L), (8L, 9L), (9L, 10L), (20L, 21L))
+
+  private def edges: DataFrame = {
+    import spark.implicits._
+    und.toDF("src", "dst")
+  }
+
+  private def verts: DataFrame = {
+    import spark.implicits._
+    (und.flatMap { case (a, b) => Seq(a, b) }.distinct :+ 30L).toDF("id")
+  }
+
   test("GraphOps pass loops keep their Spark job counts on a fixed small graph") {
     import spark.implicits._
-    // two 4-cliques joined through vertex 4–5, a tail 8–9–10, a detached
-    // pair 20–21 and an isolate 30
-    val und = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L), (4L, 5L),
-      (5L, 6L), (5L, 7L), (5L, 8L), (6L, 7L), (6L, 8L), (7L, 8L), (8L, 9L), (9L, 10L), (20L, 21L))
-    val edges = und.toDF("src", "dst")
-    val verts = (und.flatMap { case (a, b) => Seq(a, b) }.distinct :+ 30L).toDF("id")
-    val undW  = und.map { case (a, b) => (a, b, 1L + (a + b) % 3) }.toDF("a", "b", "w")
+    val undW = und.map { case (a, b) => (a, b, 1L + (a + b) % 3) }.toDF("a", "b", "w")
     val singletons = verts.select(col("id"), col("id").as("lbl"))
     // measured on the hand-rolled loops this combinator replaced
     assert(jobsOf(GraphOps.labelPropagation(verts, edges, 3).collect()) == 20)
     assert(jobsOf(GraphOps.connectedComponents(verts, edges).collect()) == 24)
     assert(jobsOf(GraphOps.refineMergeFixedPointWeighted(undW, singletons, 4).collect()) == 42)
+  }
+
+  test("Profile.measure counts the jobs and pass units of a loop and leaves capture disarmed") {
+    val stats = graft.tools.Profile.measure(spark)(GraphOps.labelPropagation(verts, edges, 3).collect())
+    assert(stats.jobs == 20, stats)
+    // the Lineage capture hook's truncation count for this call, measured
+    // on the commit before the profiler existed
+    assert(stats.passUnits == 4, stats)
+    assert(stats.planMs > 0, stats)
+    assert(Lineage.capturedPlans().isEmpty)
+    Lineage.truncate(start.select(col("id"), (col("v") + 1).as("v")))
+    assert(Lineage.capturedPlans().isEmpty, "capture is still armed")
   }
 }

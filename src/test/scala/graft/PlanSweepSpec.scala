@@ -169,6 +169,14 @@ class PlanSweepSpec extends AnyFunSuite with SparkTestBase {
                                      // stage — attributed to s19k, the alphabetically-first builder
   )
 
+  test("every query has a DuckDB oracle, every oracle a query, and no substrate shares a query name") {
+    val q = SparkEntry.queries.keySet
+    val o = SparkEntry.oracleSql.keySet
+    assert(q == o, s"no oracle: ${(q -- o).toSeq.sorted}; no query: ${(o -- q).toSeq.sorted}")
+    val clash = SparkEntry.substrates.map(_._1).filter(SparkEntry.queries.contains)
+    assert(clash.isEmpty, clash.mkString(", "))
+  }
+
   private def offenderTags(
       name: String,
       plan: SparkPlan,
