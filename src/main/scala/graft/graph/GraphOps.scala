@@ -149,7 +149,8 @@ object GraphOps {
     *      lands in one final community, deterministically labeled by the
     *      min community label.
     *
-    * Each pass is two aggregates + one top-1 window + a CC run over the
+    * The gains come from [[pairGains]], the kernel the fixed points share;
+    * around it a pass adds one top-1 window and a CC run over the
     * COMMUNITY graph (strictly smaller than the input), so the refinement
     * costs a fraction of the LPA that precedes it. Every applied merge
     * edge has positive gain in isolation; resolving pick CHAINS in one
@@ -165,86 +166,81 @@ object GraphOps {
       labels: DataFrame,
       gammaNum: Long = 1L,
       gammaDen: Long = 1L
-  ): DataFrame =
-    applyMerge(labels, mergePicks(und, labels, gammaNum, gammaDen))
+  ): DataFrame = {
+    // The edge frame built lazily (no truncate, no scalar job): w ≡ 1 and
+    // gm = the edge count as a broadcast single-row cross join.
+    val e = und.select(col("a"), col("b"), lit(1L).as("w"))
+    val u = e.crossJoin(broadcast(und.agg(count(lit(1)).as("gm"))))
+    val state = withCommDeg(withDeg(labels, strength(e)))
+    applyMerge(labels, picksFromGains(pairGains(u, state, gammaNum, gammaDen)))
+  }
 
-  /** The pick stage of one greedy merge pass: every community's best
-    * positive-gain merge partner under the RB-configuration gain at
-    * resolution γ = gammaNum/gammaDen,
+  /** The gain kernel both merge paths share: every adjacent community
+    * pair's RB-configuration merge gain at resolution γ = gammaNum/gammaDen,
     *
     *   gain · 2m²·γden = γden·2m·E_{c1,c2} − γnum·d_{c1}·d_{c2}
     *
-    * (Reichardt–Bornholdt modularity; γ=1 is the Newman/CNM gain above).
-    * Kept as a rational so the arithmetic stays integer-exact — the same
-    * reason g7's modularity is a numerator, never a float. Higher γ prices
-    * degree mass up, so only densely-connected pairs merge (finer
-    * partitions); lower γ merges toward connectivity — the knob the
-    * reference sweeps as Leiden resolutions [2.0, 0.5, 0.1]
-    * (utils/neo4j_helpers.py:237-268, settings.py:137).
+    * (Reichardt–Bornholdt modularity; γ=1 is the Newman/CNM gain above),
+    * with E the inter-community edge-weight sum, d the community strength
+    * and m = gm, the owning graph's total weight. Kept as a rational so the
+    * arithmetic stays integer-exact — the same reason g7's modularity is a
+    * numerator, never a float. Higher γ prices degree mass up, so only
+    * densely-connected pairs merge (finer partitions); lower γ merges
+    * toward connectivity — the knob the reference sweeps as Leiden
+    * resolutions [2.0, 0.5, 0.1] (utils/neo4j_helpers.py:237-268,
+    * settings.py:137).
+    *
+    * `u` is an edge frame (a, b, w, gm); `state` carries (id, lbl, cd),
+    * cd = the vertex's community strength. Returns SYMMETRIC (c1, c2,
+    * gain) rows. The pair aggregates on the canonical (least, greatest)
+    * pair FIRST and mirrors the aggregated frame after — both union
+    * branches then share the aggregate's shuffle (ReusedExchange), so the
+    * edge-labeling join runs once, not once per direction. gm rides the
+    * aggregate: both communities of an inter pair live in one graph, so
+    * min() just reads it through; dx/dy align the carried community
+    * strengths to the canonical orientation.
     */
-  private def mergePicks(
-      und: DataFrame,
-      labels: DataFrame,
-      gammaNum: Long,
-      gammaDen: Long
-  ): DataFrame = {
-    val mRow = und.agg(count(lit(1)).as("m"))
-    val deg = und
-      .select(col("a").as("id"))
-      .unionAll(und.select(col("b").as("id")))
-      .groupBy("id")
-      .agg(count(lit(1)).as("deg"))
-    mergePicksWith(und, labels, deg, mRow, gammaNum, gammaDen)
-  }
-
-  /** [[mergePicks]] with the pass-invariant frames (per-vertex degrees and
-    * the single-row edge count) supplied by the caller — the fixed-point
-    * loop computes them once, not once per pass.
-    */
-  private def mergePicksWith(
-      und: DataFrame,
-      labels: DataFrame,
-      deg: DataFrame,
-      mRow: DataFrame,
-      gammaNum: Long,
-      gammaDen: Long
-  ): DataFrame =
-    picksFromGains(
-      interWithDegrees(und, labels, deg)
-        .crossJoin(broadcast(mRow))
-        .withColumn(
-          "gain",
-          lit(gammaDen) * lit(2) * col("m") * col("e12") - lit(gammaNum) * col("d1") * col("d2")
-        )
-    )
-
-  /** Inter-community edge counts, SYMMETRIC, annotated with both sides'
-    * community degree sums: (c1, c2, e12, d1, d2). The count aggregates on
-    * the canonical (least, greatest) pair FIRST and mirrors the aggregated
-    * frame after — both union branches then share the aggregate's shuffle
-    * (ReusedExchange), so the edge-labeling join runs once per pass instead
-    * of once per direction (it used to sit under each branch).
-    */
-  private def interWithDegrees(und: DataFrame, labels: DataFrame, deg: DataFrame): DataFrame = {
-    val la = labels.select(col("id").as("a"), col("lbl").as("ca"))
-    val lb = labels.select(col("id").as("b"), col("lbl").as("cb"))
-    val half = und
-      .join(la, "a")
-      .join(lb, "b")
+  private def pairGains(u: DataFrame, state: DataFrame, gammaNum: Long, gammaDen: Long): DataFrame = {
+    val xa = state.select(col("id").as("a"), col("lbl").as("ca"), col("cd").as("da"))
+    val xb = state.select(col("id").as("b"), col("lbl").as("cb"), col("cd").as("db"))
+    val half = u
+      .join(xa, "a")
+      .join(xb, "b")
       .filter(col("ca") =!= col("cb"))
       .groupBy(least(col("ca"), col("cb")).as("cx"), greatest(col("ca"), col("cb")).as("cy"))
-      .agg(count(lit(1)).as("e12"))
-    val inter = half
-      .select(col("cx").as("c1"), col("cy").as("c2"), col("e12"))
-      .unionAll(half.select(col("cy").as("c1"), col("cx").as("c2"), col("e12")))
-    val commDeg = deg
-      .join(labels, "id")
-      .groupBy(col("lbl"))
-      .agg(sum(col("deg")).as("d"))
-    inter
-      .join(commDeg.select(col("lbl").as("c1"), col("d").as("d1")), "c1")
-      .join(commDeg.select(col("lbl").as("c2"), col("d").as("d2")), "c2")
+      .agg(
+        sum(col("w")).as("e12"),
+        min(col("gm")).as("gm"),
+        min(when(col("ca") <= col("cb"), col("da")).otherwise(col("db"))).as("dx"),
+        min(when(col("ca") <= col("cb"), col("db")).otherwise(col("da"))).as("dy")
+      )
+      // the gain is symmetric in (x, y), so it is computed ONCE on the
+      // canonical pair and mirrored with the frame
+      .withColumn("gain", gain(gammaNum, gammaDen, "dx", "dy"))
+    half
+      .select(col("cx").as("c1"), col("cy").as("c2"), col("gain"))
+      .unionAll(half.select(col("cy").as("c1"), col("cx").as("c2"), col("gain")))
   }
+
+  /** γden·2·gm·e12 − γnum·d1·d2 over a pair row's columns. */
+  private def gain(gammaNum: Long, gammaDen: Long, d1: String, d2: String): org.apache.spark.sql.Column =
+    lit(gammaDen * 2) * col("gm") * col("e12") - lit(gammaNum) * col(d1) * col(d2)
+
+  /** (id, lbl, deg): `labels` with each vertex's strength from `deg`;
+    * edgeless vertices coalesce to 0 (they never appear in a pair row).
+    */
+  private def withDeg(labels: DataFrame, deg: DataFrame): DataFrame =
+    labels
+      .select(col("id"), col("lbl"))
+      .join(deg, Seq("id"), "left")
+      .select(col("id"), col("lbl"), coalesce(col("deg"), lit(0L)).as("deg"))
+
+  /** `state` plus cd = its community's strength, as one window by lbl. */
+  private def withCommDeg(state: DataFrame): DataFrame =
+    state.withColumn(
+      "cd",
+      sum(col("deg")).over(org.apache.spark.sql.expressions.Window.partitionBy(col("lbl")))
+    )
 
   /** Positive-gain top-1 picks per community: gain desc, partner asc. */
   private def picksFromGains(gains: DataFrame): DataFrame = {
@@ -317,102 +313,104 @@ object GraphOps {
     * Deterministic and SQL-unrollable: a pass at the fixed point is a
     * no-op in both engines, so an unrolled twin with ≥ as many passes
     * computes the identical partition.
+    *
+    * `u` is an [[edgeFrame]] (or a disjoint union of them), never
+    * re-truncated here. `deg` is a hoisted [[vertexStrength]] table for
+    * callers that run many calls over one frame; `probe = false` runs
+    * exactly `maxPasses` passes with no convergence scans (the
+    * unrolled-oracle discipline).
     */
   def refineMergeFixedPoint(
-      und: DataFrame,
-      labels: DataFrame,
-      maxPasses: Int = 8,
-      gammaNum: Long = 1L,
-      gammaDen: Long = 1L
-  ): DataFrame = {
-    val u = Lineage.truncate(und.select(col("a"), col("b")))
-    val m = u.count() // scalar once — no per-pass single-row broadcast
-    mergeFixedPointCore(
-      u.withColumn("w", lit(1L)).withColumn("gm", lit(m)),
-      labels,
-      maxPasses,
-      gammaNum,
-      gammaDen
-    )
-  }
-
-  /** WEIGHTED merge fixed point (r12 verdict #8 — the igraph-with-weights
-    * form the co-occurrence substrate wants): same deterministic
-    * mutual-best-partner passes as [[refineMergeFixedPoint]] with the
-    * weighted-modularity substitution — edge counts become edge-weight
-    * sums (E12 → Σw), vertex degrees become STRENGTHS (Σ incident w), and
-    * the graph constant becomes total weight W — so the gain is
-    * γden·2W·E12w − γnum·s1·s2 (Newman 2004 §V, weighted RB form). The
-    * unweighted entry points are exactly this with w ≡ 1. `undW` is the
-    * canonical undirected edge list (a, b, w), w integral so the
-    * arithmetic stays engine-exact.
-    */
-  def refineMergeFixedPointWeighted(
-      undW: DataFrame,
-      labels: DataFrame,
-      maxPasses: Int = 8,
-      gammaNum: Long = 1L,
-      gammaDen: Long = 1L
-  ): DataFrame = {
-    val u = Lineage.truncate(undW.select(col("a"), col("b"), col("w")))
-    val wTot = u.agg(sum(col("w"))).head().getLong(0)
-    mergeFixedPointCore(u.withColumn("gm", lit(wTot)), labels, maxPasses, gammaNum, gammaDen)
-  }
-
-  /** [[refineMergeFixedPoint]] over a DISJOINT UNION of graphs in ONE pass
-    * chain — the multi-graph batching a production system uses to refine
-    * many independent graphs/communities in one job instead of one
-    * driver-sequenced chain per graph (per-pass cost is driver fixed
-    * overhead, so k small graphs batched cost ~1× the passes, not k×).
-    * `undGm` is (a, b, gm) where gm = the OWNING graph's edge count —
-    * the one global the gain formula needs; everything else (degrees,
-    * labels, picks, mutual pairs) is already per-component. Vertex-id
-    * spaces must be disjoint across the batched graphs. Each component's
-    * result is identical to a solo [[refineMergeFixedPoint]] run with the
-    * same pass budget (disjoint graphs share no keys; a converged
-    * component no-ops through the remaining passes).
-    */
-  def refineMergeFixedPointBatched(
-      undGm: DataFrame,
+      u: DataFrame,
       labels: DataFrame,
       maxPasses: Int = 8,
       gammaNum: Long = 1L,
       gammaDen: Long = 1L,
-      degIn: Option[DataFrame] = None,
-      preMaterialized: Boolean = false,
+      deg: Option[DataFrame] = None,
       probe: Boolean = true
   ): DataFrame = {
-    // preMaterialized: the caller guarantees undGm is already a checkpoint
-    // (or a narrow derivation of one), so the per-call re-truncate job is
-    // skipped — multi-call chains over one edge frame (the family sweep)
-    // otherwise pay it once per call. probe=false runs exactly maxPasses
-    // passes with no convergence scans — the unrolled-oracle discipline.
-    val sel = undGm.select(col("a"), col("b"), lit(1L).as("w"), col("gm"))
-    mergeFixedPointCore(
-      if (preMaterialized) sel else Lineage.truncate(sel),
-      labels,
-      maxPasses,
-      gammaNum,
-      gammaDen,
-      degIn,
-      probe
-    )
+    // Loop state carries the pass-invariant vertex strength so the community
+    // strength is ONE window per pass, not an aggregate + two joins.
+    val init = Lineage.truncate(withDeg(labels, deg.getOrElse(vertexStrength(u))))
+    // One materializing job per pass: gains → picks → mutual pairs (one
+    // keyed aggregate, see mutualPairs — no self-join, so picks needs no
+    // separate materialization) → relabel → new labels. Mutual pairs are
+    // DISJOINT edges with src < dst, so only the dst side relabels (the
+    // src side's least() is the identity) and the chain resolution that
+    // needs a CC run in applyMerge degenerates to one broadcastable
+    // relabel frame.
+    //
+    // Community strength rides the state frame as a window sum and is
+    // CARRIED through the endpoint-labeling join into the canonical-pair
+    // aggregate (see pairGains), so a pass costs 1 exchange for it where a
+    // separate aggregate joined back onto the mirrored pair frame cost 5.
+    def onePass(state: DataFrame, withChg: Boolean): DataFrame = {
+      val curD = withCommDeg(state)
+      val relabel = mutualPairs(picksFromGains(pairGains(u, curD, gammaNum, gammaDen)))
+        .select(col("dst").as("lbl"), col("src").as("new_lbl"))
+      // The relabel joins onto curD (the window output, already clustered
+      // by lbl) so the state side of the join reuses the window's exchange.
+      curD
+        .join(relabel, Seq("lbl"), "left")
+        .select(
+          Seq(
+            col("id"),
+            coalesce(col("new_lbl"), col("lbl")).as("lbl"),
+            col("deg")
+          ) ++ (if (withChg) Seq(col("new_lbl").isNotNull.as(Lineage.Changed)) else Nil): _*
+        )
+    }
+    // Convergence rides the relabel flag: no mutual pair ⇔ no
+    // positive-gain pick (the max-gain pick is always mutual — see the
+    // PROGRESSING note above).
+    labelFixedPoint(init, maxPasses, probe)(onePass)
   }
 
-  /** Vertex STRENGTH table (id, deg = Σ incident w) of a (a, b, w[, gm])
-    * edge frame, materialized. Public so multi-call chains over one edge
-    * frame (the family sweep) can compute it once and pass it to every
-    * fixed-point call instead of paying the aggregate per call.
+  /** The EDGE FRAME both fixed points take: one graph's canonical
+    * undirected edge list (a, b[, w]) materialized as (a, b, w, gm), with
+    * w = 1 when absent and gm = the graph's total weight Σw (the edge count
+    * when unweighted) — the one global the gain formula needs. Costs one
+    * truncate (skipped when the input is already materialized) and one
+    * scalar job; build it once and pass it to every call over the graph.
+    *
+    * w must be integral so the gain arithmetic stays engine-exact. The
+    * weighted form is the igraph-with-weights substitution (Newman 2004 §V,
+    * weighted RB form): edge counts become edge-weight sums, degrees become
+    * strengths and m becomes W, so the unweighted ladder is exactly the
+    * weighted one at w ≡ 1.
+    *
+    * A DISJOINT UNION of graphs batches into one pass chain when the
+    * caller builds the frame itself with per-edge gm = the OWNING graph's
+    * Σw: degrees, labels, picks and mutual pairs are already
+    * per-component, so with disjoint vertex-id spaces each component's
+    * result is identical to its solo run with the same pass budget (a
+    * converged component no-ops through the remaining passes). Per-pass
+    * cost is driver fixed overhead, so k batched graphs cost ~1× the
+    * passes, not k×.
     */
-  def vertexStrength(u: DataFrame): DataFrame = Lineage.truncate(
+  def edgeFrame(und: DataFrame): DataFrame = {
+    val cols = if (und.columns.contains("w")) Seq("a", "b", "w") else Seq("a", "b")
+    val e    = Lineage.truncate(und.select(cols.map(col): _*))
+    val u    = if (cols.size == 3) e else e.withColumn("w", lit(1L))
+    val gm   = u.agg(coalesce(sum(col("w")), lit(0L))).head().getLong(0)
+    u.withColumn("gm", lit(gm))
+  }
+
+  /** Vertex STRENGTH table (id, deg = Σ incident w) of an edge frame,
+    * materialized. Public so multi-call chains over one edge frame (the
+    * family sweep) can compute it once and pass it to every fixed-point
+    * call instead of paying the aggregate per call.
+    */
+  def vertexStrength(u: DataFrame): DataFrame = Lineage.truncate(strength(u))
+
+  private def strength(u: DataFrame): DataFrame =
     u.select(col("a").as("id"), col("w"))
       .unionAll(u.select(col("b").as("id"), col("w")))
       .groupBy("id")
       .agg(sum(col("w")).as("deg"))
-  )
 
-  /** The pass driver both label fixed points share ([[mergeFixedPointCore]]
-    * and [[refineWithinCore]]): `onePass(state, withChg)` applied up to
+  /** The pass driver both label fixed points share ([[refineMergeFixedPoint]]
+    * and [[refineWithinFixedPoint]]): `onePass(state, withChg)` applied up to
     * `maxPasses` times, stopping at the first pass that relabels nothing.
     *
     * Every pass is truncateFresh'd, not truncated: the label frame feeds
@@ -442,94 +440,6 @@ object GraphOps {
         (state, _) => onePass(state, probe)
       }
       .select(col("id"), col("lbl"))
-
-  private def mergeFixedPointCore(
-      u: DataFrame, // (a, b, w, gm) — materialized; w ≡ 1 for unweighted
-      labels: DataFrame,
-      maxPasses: Int,
-      gammaNum: Long,
-      gammaDen: Long,
-      degIn: Option[DataFrame] = None,
-      probe: Boolean = true
-  ): DataFrame = {
-    // deg = STRENGTH (Σ incident w) — the plain degree when w ≡ 1.
-    // Callers that run many fixed-point calls over (filters of) ONE edge
-    // frame pass the hoisted strength table in (degIn — disjoint copies
-    // never share vertices, so the union frame's strengths restrict
-    // correctly to any id-range filter of it).
-    val deg = degIn.getOrElse(vertexStrength(u))
-    // Loop state carries the pass-invariant vertex degree so the community
-    // degree sum is ONE window per pass, not an aggregate + two joins
-    // (edgeless vertices coalesce to 0 — they never appear in inter).
-    val init = Lineage.truncate(
-      labels
-        .select(col("id"), col("lbl"))
-        .join(deg, Seq("id"), "left")
-        .select(col("id"), col("lbl"), coalesce(col("deg"), lit(0L)).as("deg"))
-    )
-    // One materializing job per pass: picks → mutual pairs (one keyed
-    // aggregate, see mutualPairs — no self-join, so picks needs no
-    // separate materialization) → relabel → new labels. Mutual pairs are
-    // DISJOINT edges with src < dst, so only the dst side relabels (the
-    // src side's least() is the identity) and the chain resolution that
-    // needs a CC run in applyMerge degenerates to one broadcastable
-    // relabel frame.
-    //
-    // Community degree rides the state frame as a window sum and is
-    // CARRIED through the endpoint-labeling join into the canonical-pair
-    // aggregate (min() reads the per-pair constant through), instead of
-    // the old separate commDeg aggregate joined back onto the mirrored
-    // pair frame — that shape cost 5 exchanges per pass (agg + 2×
-    // two-sided joins) where the carry costs 1 (the window), and the
-    // values are identical integers, so the partition is unchanged.
-    def onePass(state: DataFrame, withChg: Boolean): DataFrame = {
-      val wLbl = org.apache.spark.sql.expressions.Window.partitionBy(col("lbl"))
-      val curD = state.withColumn("cd", sum(col("deg")).over(wLbl))
-      val xa = curD.select(col("id").as("a"), col("lbl").as("ca"), col("cd").as("da"))
-      val xb = curD.select(col("id").as("b"), col("lbl").as("cb"), col("cd").as("db"))
-      // gm (the owning graph's edge count) rides the canonical-pair
-      // aggregate: both communities of an inter pair live in one graph,
-      // so min() just reads it through; dx/dy align the carried community
-      // degrees to the canonical (least, greatest) orientation.
-      val half = u
-        .join(xa, "a")
-        .join(xb, "b")
-        .filter(col("ca") =!= col("cb"))
-        .groupBy(least(col("ca"), col("cb")).as("cx"), greatest(col("ca"), col("cb")).as("cy"))
-        .agg(
-          sum(col("w")).as("e12"),
-          min(col("gm")).as("gm"),
-          min(when(col("ca") <= col("cb"), col("da")).otherwise(col("db"))).as("dx"),
-          min(when(col("ca") <= col("cb"), col("db")).otherwise(col("da"))).as("dy")
-        )
-        // The gain is symmetric in (x, y) — γden·2m·E12 − γnum·d1·d2 — so it
-        // is computed ONCE on the canonical pair and mirrored with the frame.
-        .withColumn(
-          "gain",
-          lit(gammaDen * 2) * col("gm") * col("e12") - lit(gammaNum) * col("dx") * col("dy")
-        )
-      val gains = half
-        .select(col("cx").as("c1"), col("cy").as("c2"), col("gain"))
-        .unionAll(half.select(col("cy").as("c1"), col("cx").as("c2"), col("gain")))
-      val relabel = mutualPairs(picksFromGains(gains))
-        .select(col("dst").as("lbl"), col("src").as("new_lbl"))
-      // The relabel joins onto curD (the window output, already clustered
-      // by lbl) so the state side of the join reuses the window's exchange.
-      curD
-        .join(relabel, Seq("lbl"), "left")
-        .select(
-          Seq(
-            col("id"),
-            coalesce(col("new_lbl"), col("lbl")).as("lbl"),
-            col("deg")
-          ) ++ (if (withChg) Seq(col("new_lbl").isNotNull.as(Lineage.Changed)) else Nil): _*
-        )
-    }
-    // Convergence rides the relabel flag: no mutual pair ⇔ no
-    // positive-gain pick (the max-gain pick is always mutual — see the
-    // PROGRESSING note above).
-    labelFixedPoint(init, maxPasses, probe)(onePass)
-  }
 
   /** The LEIDEN REFINEMENT PHASE (Traag–Waltman–van Eck 2019, the step
     * that makes Leiden ≠ Louvain; reference utils/neo4j_helpers.py:237-268
@@ -566,86 +476,24 @@ object GraphOps {
     * note). Passes run over sub-community frames that only coarsen, and the
     * loop stops at the first pass with no mutual merge.
     *
-    * Input: `und` canonical undirected edges (a, b), `parent` = (id, lbl).
+    * Input: `u` an [[edgeFrame]] (or a disjoint union of them; `deg` and
+    * `probe` as in [[refineMergeFixedPoint]]), `parent` = (id, lbl). With
+    * weights, E is the edge-weight sum and degrees are strengths.
     * Returns (id, lbl): the refined partition (labels = min member id per
     * sub-community; parent communities with no internal structure return
     * intact).
     */
   def refineWithinFixedPoint(
-      und: DataFrame,
-      parent: DataFrame,
-      maxPasses: Int = 6,
-      gammaNum: Long = 1L,
-      gammaDen: Long = 1L,
-      gateNum: Long = 1L,
-      gateDen: Long = 6L
-  ): DataFrame = {
-    val u = Lineage.truncate(und.select(col("a"), col("b")))
-    val m = u.count() // scalar once — no per-pass single-row broadcast
-    refineWithinCore(
-      u.withColumn("gm", lit(m)),
-      parent,
-      maxPasses,
-      gammaNum,
-      gammaDen,
-      gateNum,
-      gateDen
-    )
-  }
-
-  /** [[refineWithinFixedPoint]] over a DISJOINT UNION of graphs in one
-    * pass chain (see [[refineMergeFixedPointBatched]] for the batching
-    * contract): `undGm` = (a, b, gm) with gm = the owning graph's edge
-    * count; vertex-id spaces disjoint; per-component results identical to
-    * solo runs with the same pass budget.
-    */
-  def refineWithinFixedPointBatched(
-      undGm: DataFrame,
+      u: DataFrame,
       parent: DataFrame,
       maxPasses: Int = 6,
       gammaNum: Long = 1L,
       gammaDen: Long = 1L,
       gateNum: Long = 1L,
       gateDen: Long = 6L,
-      degIn: Option[DataFrame] = None,
-      preMaterialized: Boolean = false,
+      deg: Option[DataFrame] = None,
       probe: Boolean = true
   ): DataFrame = {
-    val sel = undGm.select(col("a"), col("b"), col("gm"))
-    refineWithinCore(
-      if (preMaterialized) sel else Lineage.truncate(sel),
-      parent,
-      maxPasses,
-      gammaNum,
-      gammaDen,
-      gateNum,
-      gateDen,
-      degIn,
-      probe
-    )
-  }
-
-  private def refineWithinCore(
-      u: DataFrame, // (a, b, gm) — materialized
-      parent: DataFrame,
-      maxPasses: Int,
-      gammaNum: Long,
-      gammaDen: Long,
-      gateNum: Long,
-      gateDen: Long,
-      degIn: Option[DataFrame] = None,
-      probe: Boolean = true
-  ): DataFrame = {
-    // Unweighted degree = strength at w ≡ 1, so a hoisted [[vertexStrength]]
-    // table (sum of 1L per incidence) is value-identical to this count.
-    val deg = degIn.getOrElse(
-      Lineage.truncate(
-        u.select(col("a").as("id"))
-          .unionAll(u.select(col("b").as("id")))
-          .groupBy("id")
-          .agg(count(lit(1)).as("deg"))
-      )
-    )
     val par = parent.select(col("id"), col("lbl").as("parent"))
     val psz = par.groupBy("parent").agg(count(lit(1)).as("psz"))
     // Loop state carries the PASS-INVARIANT per-vertex columns (vertex
@@ -656,7 +504,7 @@ object GraphOps {
     // the inter frame, so it can never merge either way).
     val init = Lineage.truncate(
       par
-        .join(deg, Seq("id"), "left")
+        .join(deg.getOrElse(vertexStrength(u)), Seq("id"), "left")
         .join(psz, "parent")
         .select(
           col("id"),
@@ -710,7 +558,7 @@ object GraphOps {
           col("pa").as("parent")
         )
         .agg(
-          count(lit(1)).as("e12"),
+          sum(col("w")).as("e12"),
           min(col("gm")).as("gm"),
           min(when(col("ca") <= col("cb"), col("sza")).otherwise(col("szb"))).as("szx"),
           min(when(col("ca") <= col("cb"), col("szb")).otherwise(col("sza"))).as("szy"),
@@ -749,10 +597,7 @@ object GraphOps {
         .filter(
           lit(gateDen) * col("cut2") >= lit(gateNum) * col("sz2") * (col("psz") - col("sz2"))
         )
-        .withColumn(
-          "gain",
-          lit(gammaDen * 2) * col("gm") * col("e12") - lit(gammaNum) * col("d1") * col("d2")
-        )
+        .withColumn("gain", gain(gammaNum, gammaDen, "d1", "d2"))
       // mutual pairs only (disjoint, src < dst — so only the dst side
       // relabels); derived by ONE keyed aggregate over the picks
       // ([[mutualPairs]]), so the pass needs no separate picks
@@ -818,15 +663,17 @@ object GraphOps {
       passesPerLevel: Int = 3,
       refinePassesPerLevel: Int = 4
   ): DataFrame = {
-    val u = Lineage.truncate(und.select(col("a"), col("b")))
+    // one edge frame and one strength table serve every level
+    val u   = edgeFrame(und)
+    val deg = Some(vertexStrength(u))
     val lpa = Lineage.truncate(
       labelPropagation(vertexIds, u.select(col("a").as("src"), col("b").as("dst")), lpaIters)
     )
-    val levels = resolutions.zipWithIndex
-      .scanLeft(lpa) { case (prev, ((gn, gd), _)) =>
-        val merged = refineMergeFixedPoint(u, prev, passesPerLevel, gn, gd)
+    val levels = resolutions
+      .scanLeft(lpa) { case (prev, (gn, gd)) =>
+        val merged = refineMergeFixedPoint(u, prev, passesPerLevel, gn, gd, deg)
         if (refinePassesPerLevel <= 0) merged
-        else refineWithinFixedPoint(u, merged, refinePassesPerLevel, gn, gd)
+        else refineWithinFixedPoint(u, merged, refinePassesPerLevel, gn, gd, deg = deg)
       }
       .drop(1)
     levels.zipWithIndex

@@ -150,12 +150,13 @@ object Pipeline {
     val spark  = Engine.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val (counts, report) = run(spark, sfDir, outDir)
+    val checks     = report.collect().map(r => r.getString(0) -> r.getBoolean(2))
     val countsJson = counts.map { case (k, v) => s""""$k":$v""" }.mkString(",")
-    val checksJson = report
-      .collect()
-      .map(r => s""""${r.getString(0)}":${r.getBoolean(2)}""")
-      .mkString(",")
+    val checksJson = checks.map { case (k, ok) => s""""$k":$ok""" }.mkString(",")
     println(s"""{"assets":{$countsJson},"checks":{$checksJson}}""")
     spark.stop()
+    val failed = checks.collect { case (k, false) => k }
+    failed.foreach(k => System.err.println(s"quality check failed: $k"))
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

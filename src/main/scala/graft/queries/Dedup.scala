@@ -40,8 +40,8 @@ object Dedup extends QueryModule {
 
   // Signature machinery shared with the stream surface lives in
   // graft.operators.MinHashOps (one definition for batch corpus builds and
-  // incremental ingest); these aliases keep the module self-describing and
-  // its oracle constants in one import.
+  // incremental ingest); call it as MH.*. The constant aliases keep the
+  // oracle SQL's constants in one import.
   import graft.operators.{MinHashOps => MH}
   private val ShingleN  = MH.ShingleN
   private val NumHashes = MH.NumHashes
@@ -50,12 +50,6 @@ object Dedup extends QueryModule {
   private val ModP      = MH.ModP
 
   private def words(c: Column): Column = split(c, " ")
-
-  private def shingles(c: Column): Column = MH.shingles(c)
-  private def hash24(c: Column): Column   = MH.hash24(c)
-
-  private def affineA(i: Int): Long = MH.affineA(i)
-  private def affineB(i: Int): Long = MH.affineB(i)
 
   /** documents ∪ perturbed copy — the dedup test corpus (see scaladoc). */
   private def corpus(s: SparkSession, d: String): DataFrame = {
@@ -70,24 +64,6 @@ object Dedup extends QueryModule {
       )
   }
 
-  /** (doc_id, band, band_key) — NumBands rows per document.
-    *
-    * Shape: explode shingles → ONE md5 per (doc, shingle) row → the
-    * NumHashes Carter-Wegman minhashes `min((aᵢ·x+bᵢ) mod p)` as grouped
-    * mins. The md5 is computed exactly once per shingle (array-expression
-    * forms re-inline it per hash — 12× the digest work), and the groupBy
-    * runs map-side partial mins so the shuffle carries NumHashes longs per
-    * (doc, partition), not the shingle set.
-    */
-  /** (doc_id, m0..m11) — the full MinHash signature table (shared by the
-    * band keys and d10's estimator calibration).
-    */
-  private def signatures(c: DataFrame): DataFrame = MH.signatures(c)
-
-  private def bandKeys(c: DataFrame): DataFrame = MH.bandKeys(c)
-
-  private def bandKeysFromSig(sig: DataFrame): DataFrame = MH.bandKeysFromSig(sig)
-
   /** Soak diagnostic (r9 verdict #2): the candidate-join size the d-family
     * commits to on a given corpus, priced from bucket occupancy alone —
     * the d15 audit evaluated at d1's production banding. Returns
@@ -98,7 +74,7 @@ object Dedup extends QueryModule {
     * One bounded single-row collect — a diagnostic, not an operator.
     */
   private[graft] def candidateDiagnostics(s: SparkSession, d: String): (Long, Long, Long) = {
-    val row = bandKeys(corpus(s, d))
+    val row = MH.bandKeys(corpus(s, d))
       .groupBy(col("band"), col("bkey"))
       .agg(count(lit(1)).as("n"))
       .agg(
@@ -131,7 +107,7 @@ object Dedup extends QueryModule {
     * recompute the signatures.
     */
   private def d1_minhash_candidates(s: SparkSession, d: String): DataFrame =
-    candidatePairs(graft.Lineage.truncate(bandKeys(corpus(s, d))))
+    candidatePairs(graft.Lineage.truncate(MH.bandKeys(corpus(s, d))))
 
   /** D15 — LSH banding-parameter AUDIT: for every (rows-per-band, bands)
     * split of the 12-hash signature — (1,12) loosest … (12,1) strictest —
@@ -193,7 +169,7 @@ object Dedup extends QueryModule {
 
   private def d2VerifiedPairsCompute(s: SparkSession, d: String): DataFrame = {
     val sh = graft.Lineage.truncate(
-      corpus(s, d).select(col("doc_id"), shingles(col("text")).as("sh"))
+      corpus(s, d).select(col("doc_id"), MH.shingles(col("text")).as("sh"))
     )
     val cand = d1_minhash_candidates(s, d)
     val j = cand
@@ -219,7 +195,7 @@ object Dedup extends QueryModule {
   private def d3_simhash(s: SparkSession, d: String): DataFrame = {
     val wx = table(s, d, "documents")
       .select(col("doc_id"), explode(words(col("text"))).as("w"))
-      .select(col("doc_id"), hash24(col("w")).as("x"))
+      .select(col("doc_id"), MH.hash24(col("w")).as("x"))
     val votes = (0 until 16).map(b =>
       sum(shiftright(col("x"), b).bitwiseAND(lit(1L)) * 2 - 1).as(s"v$b")
     )
@@ -574,12 +550,12 @@ object Dedup extends QueryModule {
     */
   private def d10_minhash_estimate(s: SparkSession, d: String): DataFrame = {
     val c   = corpus(s, d)
-    val sig = graft.Lineage.truncate(signatures(c))
+    val sig = graft.Lineage.truncate(MH.signatures(c))
     // candidates derive from the SAME truncated signature table (band
     // keys are a narrow projection of it) — one signature build total
-    val cand = candidatePairs(bandKeysFromSig(sig))
+    val cand = candidatePairs(MH.bandKeysFromSig(sig))
     val sh = graft.Lineage.truncate(
-      c.select(col("doc_id"), shingles(col("text")).as("sh"))
+      c.select(col("doc_id"), MH.shingles(col("text")).as("sh"))
     )
     val a = sig.select(
       col("doc_id").as("doc1") +: (0 until NumHashes).map(h => col(s"m$h").as(s"a$h")): _*
@@ -644,8 +620,8 @@ object Dedup extends QueryModule {
     */
   private def d20_bbit_minhash(s: SparkSession, d: String): DataFrame = {
     val c    = corpus(s, d)
-    val sig  = graft.Lineage.truncate(signatures(c))
-    val cand = candidatePairs(bandKeysFromSig(sig))
+    val sig  = graft.Lineage.truncate(MH.signatures(c))
+    val cand = candidatePairs(MH.bandKeysFromSig(sig))
     val a = sig.select(
       col("doc_id").as("doc1") +: (0 until NumHashes).map(h => col(s"m$h").as(s"a$h")): _*
     )
@@ -680,7 +656,7 @@ object Dedup extends QueryModule {
       (conv(substring(md5(concat(c.cast("string"), lit("|inc"))), 1, 6), 16, 10)
         .cast("long") % 10) >= 8
     val all   = corpus(s, d)
-    val bands = graft.Lineage.truncate(bandKeys(all).withColumn("is_batch", isBatch(col("doc_id"))))
+    val bands = graft.Lineage.truncate(MH.bandKeys(all).withColumn("is_batch", isBatch(col("doc_id"))))
     val cand = bands
       .filter(col("is_batch"))
       .as("a")
@@ -691,7 +667,7 @@ object Dedup extends QueryModule {
       .select(col("a.doc_id").as("bid"), col("b.doc_id").as("iid"))
       .distinct()
     val sh = graft.Lineage.truncate(
-      all.select(col("doc_id"), shingles(col("text")).as("sh"))
+      all.select(col("doc_id"), MH.shingles(col("text")).as("sh"))
     )
     val verified = cand
       .join(sh.select(col("doc_id").as("bid"), col("sh").as("s1")), "bid")
@@ -918,9 +894,9 @@ object Dedup extends QueryModule {
         )
       )
     val sh = graft.Lineage.truncate(
-      audit.select(col("doc_id"), shingles(col("text")).as("sh"))
+      audit.select(col("doc_id"), MH.shingles(col("text")).as("sh"))
     )
-    val cands = candidatePairs(graft.Lineage.truncate(bandKeys(audit)))
+    val cands = candidatePairs(graft.Lineage.truncate(MH.bandKeys(audit)))
     val planted = docs
       .select((-col("doc_id") - 1).as("doc1"), col("doc_id").as("doc2"))
     val truth = planted
@@ -1313,7 +1289,7 @@ object Dedup extends QueryModule {
   private val sigSql = {
     val cols = (0 until NumHashes)
       .map(h =>
-        s"list_min(list_transform(xs, x -> (x * ${affineA(h)} + ${affineB(h)}) % $ModP)) AS m$h"
+        s"list_min(list_transform(xs, x -> (x * ${MH.affineA(h)} + ${MH.affineB(h)}) % $ModP)) AS m$h"
       )
       .mkString(", ")
     s"sig AS (SELECT doc_id, $cols FROM shx)"

@@ -582,7 +582,7 @@ object GraphQueries extends QueryModule {
         GraphOps.labelPropagation(verts, und.select(col("a").as("src"), col("b").as("dst")), 3)
       )
       val pass1 = GraphOps.refineMerge(und, labels)
-      val fixed = GraphOps.refineMergeFixedPoint(und, labels, maxPasses = 4)
+      val fixed = GraphOps.refineMergeFixedPoint(GraphOps.edgeFrame(und), labels, maxPasses = 4)
       val base = GraphOps
         .modularityComponents(und, labels)
         .select(
@@ -896,8 +896,8 @@ object GraphQueries extends QueryModule {
     * one planted graph — once unweighted (g8b's
     * [[graft.graph.GraphOps.refineMergeFixedPoint]]) and once under the
     * weighted substitution E12 → Σw, degree → strength, m → W
-    * ([[graft.graph.GraphOps.refineMergeFixedPointWeighted]] — one
-    * aggregate substitution in the shared core) — and score both
+    * (the same entry over a weighted [[graft.graph.GraphOps.edgeFrame]] —
+    * one aggregate substitution in the shared core) — and score both
     * labelings under weighted modularity.
     *
     * The planted graph makes the weights FLIP a merge decision: two
@@ -942,8 +942,8 @@ object GraphQueries extends QueryModule {
       val lpa = graft.Lineage.truncate(
         GraphOps.labelPropagation(verts, und.select(col("a").as("src"), col("b").as("dst")), 3)
       )
-      val unw = GraphOps.refineMergeFixedPoint(und, lpa, 4, 1L, 1L)
-      val wtd = GraphOps.refineMergeFixedPointWeighted(undW, lpa, 4, 1L, 1L)
+      val unw = GraphOps.refineMergeFixedPoint(GraphOps.edgeFrame(und), lpa, 4, 1L, 1L)
+      val wtd = GraphOps.refineMergeFixedPoint(GraphOps.edgeFrame(undW), lpa, 4, 1L, 1L)
       val tagged = unw
         .select(lit("unweighted").as("variant"), col("id"), col("lbl"))
         .unionByName(wtd.select(lit("weighted").as("variant"), col("id"), col("lbl")))
@@ -1185,7 +1185,7 @@ object GraphQueries extends QueryModule {
     // through ONE pass chain — the ballast copy's vertex ids offset by
     // +1000 (nation is a fixed 25-row dimension, keys < 1000 at any SF)
     // and each edge carrying its graph's edge count gm, the one global
-    // the gain formula needs (GraphOps.refineMergeFixedPointBatched).
+    // the gain formula needs (see GraphOps.edgeFrame on batching).
     // Per-pass cost is driver fixed overhead, so batching halves the
     // ladder's wall time vs the two future-overlapped chains it replaces;
     // per-graph results are identical by shift isomorphism (all label
@@ -1202,13 +1202,13 @@ object GraphQueries extends QueryModule {
           u2.select((col("a") + 1000).as("a"), (col("b") + 1000).as("b"), lit(m2).as("gm"))
         )
     )
+    val frame = und.withColumn("w", lit(1L))
     val verts = v1.select(col("id")).unionByName(v2.select((col("id") + 1000).as("id")))
     val lpa = graft.Lineage.truncate(
       GraphOps.labelPropagation(verts, und.select(col("a").as("src"), col("b").as("dst")), 3)
     )
-    val fixed =
-      graft.Lineage.truncate(GraphOps.refineMergeFixedPointBatched(und, lpa, maxPasses = 4))
-    val refined = GraphOps.refineWithinFixedPointBatched(und, fixed, maxPasses = 6)
+    val fixed   = graft.Lineage.truncate(GraphOps.refineMergeFixedPoint(frame, lpa, maxPasses = 4))
+    val refined = GraphOps.refineWithinFixedPoint(frame, fixed, maxPasses = 6)
     // BOTH partitions of BOTH graphs scored through ONE tagged pipeline
     // (r11 #2's action-count discipline): union the labelings under a
     // w∈{f,r} tag, derive the graph from the id range, run the modularity
@@ -1359,8 +1359,9 @@ object GraphQueries extends QueryModule {
   /** γ = gn/gd per level of the resolution ladder (2.0, 0.5, 0.1). */
   private val sweepRes = Vector((2L, 1L), (1L, 2L), (1L, 10L))
 
-  /** Five disjoint copies' undirected edges, (a, b, gm) with gm = the
-    * owning copy's edge count riding as a literal column.
+  /** Five disjoint copies' undirected edges as one edge frame, (a, b, w,
+    * gm) with w ≡ 1 and gm = the owning copy's edge count riding as a
+    * literal column.
     */
   private def sweepEdges(s: SparkSession, d: String): DataFrame =
     graft.Memo.cached(sweepEdgesMemo, s, d)(graft.Tuning.dimensionGraphProfile(s) {
@@ -1374,7 +1375,7 @@ object GraphQueries extends QueryModule {
       val m2 = u2.count()
       val mn = un.count()
       def ecopy(u: DataFrame, m: Long, off: Long): DataFrame =
-        u.select((col("a") + off).as("a"), (col("b") + off).as("b"), lit(m).as("gm"))
+        u.select((col("a") + off).as("a"), (col("b") + off).as("b"), lit(1L).as("w"), lit(m).as("gm"))
       ecopy(u1, m1, 0L)
         .unionByName(ecopy(u2, m2, 1000L))
         .unionByName(ecopy(u1, m1, 10000L))
@@ -1389,9 +1390,7 @@ object GraphQueries extends QueryModule {
     */
   private def sweepDeg(s: SparkSession, d: String): Option[DataFrame] =
     Some(graft.Memo.cached(sweepDegMemo, s, d)(graft.Tuning.dimensionGraphProfile(s) {
-      GraphOps.vertexStrength(
-        sweepEdges(s, d).select(col("a"), col("b"), lit(1L).as("w"))
-      )
+      GraphOps.vertexStrength(sweepEdges(s, d))
     }))
 
   /** The shared LPA seed (3 synchronous iterations over all five copies). */
@@ -1435,19 +1434,10 @@ object GraphQueries extends QueryModule {
       val prev     = if (li == 0) sweepLpa(s, d) else sweepLevel(s, d, li - 1)
       val (gn, gd) = sweepRes(li)
       val merged3 = graft.Lineage.truncate(
-        GraphOps.refineMergeFixedPointBatched(
-          und5, prev, 3, gn, gd, deg5, preMaterialized = true, probe = false)
+        GraphOps.refineMergeFixedPoint(und5, prev, 3, gn, gd, deg5, probe = false)
       )
-      val mergedN = GraphOps.refineMergeFixedPointBatched(
-        undN,
-        merged3.filter(col("id") >= 20000),
-        1,
-        gn,
-        gd,
-        deg5,
-        preMaterialized = true,
-        probe = false
-      )
+      val mergedN = GraphOps.refineMergeFixedPoint(
+        undN, merged3.filter(col("id") >= 20000), 1, gn, gd, deg5, probe = false)
       merged3.filter(col("id") < 20000).unionByName(mergedN)
     })
 
@@ -1460,16 +1450,8 @@ object GraphQueries extends QueryModule {
       val undR     = sweepEdges(s, d).filter(col("a") >= 10000)
       val merged   = sweepMerged(s, d, li)
       val (gn, gd) = sweepRes(li)
-      val refinedR = GraphOps.refineWithinFixedPointBatched(
-        undR,
-        merged.filter(col("id") >= 10000),
-        4,
-        gn,
-        gd,
-        degIn = sweepDeg(s, d),
-        preMaterialized = true,
-        probe = false
-      )
+      val refinedR = GraphOps.refineWithinFixedPoint(
+        undR, merged.filter(col("id") >= 10000), 4, gn, gd, deg = sweepDeg(s, d), probe = false)
       merged.filter(col("id") < 10000).unionByName(refinedR)
     })
 

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Engine.table
 import graft.functions.{VectorFunctions => VF}
+import graft.operators.KnnGraphOps
 
 /** SURVEY.md §2.1 S19/S20 + §2.10 G3 — the vector-store surface, Spark-first.
   *
@@ -630,18 +631,11 @@ object Vectors extends QueryModule {
   // Graph-index machinery shared with the streaming ingest face — ONE
   // construction for the batch build and its incremental maintenance
   // (the MinHashOps precedent): [[graft.operators.KnnGraphOps]].
-  private val JBands  = graft.operators.KnnGraphOps.Bands
-  private val JPlanes = graft.operators.KnnGraphOps.Planes
-  private val JDeg    = graft.operators.KnnGraphOps.Deg
-  private val JCap    = graft.operators.KnnGraphOps.Cap
+  private val JBands  = KnnGraphOps.Bands
+  private val JPlanes = KnnGraphOps.Planes
+  private val JDeg    = KnnGraphOps.Deg
+  private val JCap    = KnnGraphOps.Cap
   private val JPasses = 5 // fixed beam-search depth (measured convergence point)
-
-  /** Integer-lattice component quantization (the floor(e·1024) lane every
-    * quantized vector query here rides): exact in both engines — ×1024 is
-    * an exponent shift, floor is IEEE-exact — and kept as array<double>
-    * so [[VF.dot]] (codegen'd strict fold) computes the exact integer dot.
-    */
-  private def quantArr(c: Column): Column = graft.operators.KnnGraphOps.quantArr(c)
 
   /** The DEGREE-BOUNDED kNN neighbor graph substrate s19j routes over —
     * the index-build half of an NSW/HNSW-family ANN structure (Malkov–
@@ -673,7 +667,7 @@ object Vectors extends QueryModule {
     graft.Memo.cached(knnGraphMemo, s, d) {
       knnGraphOver(
         table(s, d, "embeddings")
-          .select(col("vec_id"), col("embedding"), quantArr(col("embedding")).as("qa")))
+          .select(col("vec_id"), col("embedding"), KnnGraphOps.quantArr(col("embedding")).as("qa")))
     }
 
   /** s19l's COARSE layer: the same construction over the 1-in-8
@@ -687,38 +681,22 @@ object Vectors extends QueryModule {
       knnGraphOver(
         table(s, d, "embeddings")
           .filter(expr("conv(substr(md5(cast(vec_id as string)), 1, 6), 16, 10) % 8 = 0"))
-          .select(col("vec_id"), col("embedding"), quantArr(col("embedding")).as("qa")))
+          .select(col("vec_id"), col("embedding"), KnnGraphOps.quantArr(col("embedding")).as("qa")))
     }
-
-  /** All [[JBands]] band views of a (vec_id, embedding, qa) frame —
-    * (band, vec_id, qa, bk) rows, the key space both the graph BUILD and
-    * the s19m insert PROBE hash into.
-    */
-  private def bandKeyed(base: DataFrame): DataFrame =
-    graft.operators.KnnGraphOps.bandKeyed(base)
-
-  /** [[bandKeyed]] with the per-bucket occupancy cap applied (rank by
-    * md5(vec_id) — the m9/m10 banding discipline). This frame IS the
-    * persistent "bucket index" a production store would keep on disk:
-    * s19m probes a delta batch against it without touching the rest of
-    * the corpus.
-    */
-  private def bandCapped(base: DataFrame): DataFrame =
-    graft.operators.KnnGraphOps.bandCapped(base)
 
   /** The banded degree-bounded symmetric kNN graph over any
     * (vec_id, embedding, qa) base — see [[knnGraph]]'s scaladoc for the
     * construction and its bounds.
     */
   private def knnGraphOver(base: DataFrame): DataFrame =
-    knnGraphFromCapped(bandCapped(base))
+    knnGraphFromCapped(KnnGraphOps.bandCapped(base))
 
   /** Pair join + top-M + symmetrize over an already-capped bucket frame
     * (split from [[knnGraphOver]] so s19m can reuse the capped buckets as
     * the probe target).
     */
   private def knnGraphFromCapped(capped: DataFrame): DataFrame =
-    graft.operators.KnnGraphOps.graphFromCapped(capped)
+    KnnGraphOps.graphFromCapped(capped)
 
   /** S19j — GRAPH-ROUTED ANN: fixed-depth beam search over the
     * degree-bounded kNN graph ([[knnGraph]]) — the NSW/HNSW-family query
@@ -762,7 +740,7 @@ object Vectors extends QueryModule {
       .join(broadcast(ids), Seq("vec_id"))
       .select(
         col("vec_id"),
-        VF.dot(quantArr(col("embedding")), typedlit(qq)).cast("long").as("sim_q"))
+        VF.dot(KnnGraphOps.quantArr(col("embedding")), typedlit(qq)).cast("long").as("sim_q"))
 
   /** The ×1024-quantized query vector (vec 0), collected ONCE per query
     * construction — bounded by contract (one row, 64 lattice longs; the
@@ -777,7 +755,7 @@ object Vectors extends QueryModule {
   private def queryQq(s: SparkSession, d: String): Seq[Long] =
     table(s, d, "embeddings")
       .filter(col("vec_id") === 0)
-      .select(quantArr(col("embedding")).as("qq"))
+      .select(KnnGraphOps.quantArr(col("embedding")).as("qq"))
       .head(1)
       .headOption
       // NOTE the eager-collect side effect: query CONSTRUCTION runs one
@@ -844,7 +822,7 @@ object Vectors extends QueryModule {
     // overhead (the r19 anti-scaling diagnosis).
     val scorer = scoreAgainstQuery(s, d)
     val beam = graft.Tuning.boundedFrontierProfile(s) {
-      graft.operators.KnnGraphOps
+      KnnGraphOps
         .beamSearch(graft.Lineage.truncate(scorer(entry)), nbrs, K, JPasses, scorer)
     }
     val exact = s19_knn_cosine(s, d).select(col("vec_id").as("evid"), lit(1L).as("hit"))
@@ -898,9 +876,9 @@ object Vectors extends QueryModule {
       .limit(1)
     val scorer = scoreAgainstQuery(s, d) // one literal-folded qq for all 6 passes
     val beam = graft.Tuning.boundedFrontierProfile(s) { // bounded passes — see s19j
-      val coarse = graft.operators.KnnGraphOps // coarse descent
+      val coarse = KnnGraphOps // coarse descent
         .beamSearch(graft.Lineage.truncate(scorer(entry)), nbrs1, K, 2, scorer)
-      graft.operators.KnnGraphOps.beamSearch(coarse, nbrs0, K, 4, scorer) // fine search
+      KnnGraphOps.beamSearch(coarse, nbrs0, K, 4, scorer) // fine search
     }
     val exact = s19_knn_cosine(s, d).select(col("vec_id").as("evid"), lit(1L).as("hit"))
     val flagged = beam
@@ -942,7 +920,7 @@ object Vectors extends QueryModule {
 
   private def embQa(s: SparkSession, d: String): DataFrame =
     table(s, d, "embeddings")
-      .select(col("vec_id"), col("embedding"), quantArr(col("embedding")).as("qa"))
+      .select(col("vec_id"), col("embedding"), KnnGraphOps.quantArr(col("embedding")).as("qa"))
 
   /** The BASE corpus's capped band buckets — the persistent "bucket index"
     * the insert path probes (memo-shared with the base graph build).
@@ -951,7 +929,7 @@ object Vectors extends QueryModule {
 
   private def baseCapped(s: SparkSession, d: String): DataFrame =
     graft.Memo.cached(baseCapMemo, s, d) {
-      bandCapped(embQa(s, d).filter(!insertBatchPred))
+      KnnGraphOps.bandCapped(embQa(s, d).filter(!insertBatchPred))
     }
 
   /** The kNN graph over the BASE corpus only — the "existing index" state
@@ -999,7 +977,7 @@ object Vectors extends QueryModule {
     import graft.operators.{KnnGraphOps => KG}
     val delta = embQa(s, d).filter(insertBatchPred)
     val probed = KG.bucketPairs(
-      bandKeyed(delta),
+      KnnGraphOps.bandKeyed(delta),
       baseCapped(s, d).select(col("band"), col("bk"), col("vec_id").as("v2"), col("qa").as("qa2")))
     val newDirected = KG.topMLinks(probed)
     val newEdges    = graft.Lineage.truncate(KG.symmetrize(newDirected))
@@ -1032,8 +1010,8 @@ object Vectors extends QueryModule {
     // (see taggedBeamSearch). The literal qq/dq folds are unchanged.
     val e    = table(s, d, "embeddings")
     val qq   = queryQq(s, d)
-    val simQ = VF.dot(quantArr(col("embedding")), typedlit(qq)).cast("long")
-    val simS = VF.dot(quantArr(col("embedding")), typedlit(dq)).cast("long")
+    val simQ = VF.dot(KnnGraphOps.quantArr(col("embedding")), typedlit(qq)).cast("long")
+    val simS = VF.dot(KnnGraphOps.quantArr(col("embedding")), typedlit(dq)).cast("long")
     val sim  = when(col("tag") === "q", simQ).otherwise(simS)
     val (beam, selfBeam) = graft.Tuning.boundedFrontierProfile(s) {
       val e0 = e.join(broadcast(entry), Seq("vec_id"))
@@ -1112,7 +1090,7 @@ object Vectors extends QueryModule {
     val exact = s19_knn_cosine(s, d).select(col("vec_id"), lit(1L).as("hit"))
     val e     = table(s, d, "embeddings")
     val qq    = queryQq(s, d) // one literal-folded qq for all passes
-    val sim   = VF.dot(quantArr(col("embedding")), typedlit(qq)).cast("long")
+    val sim   = VF.dot(KnnGraphOps.quantArr(col("embedding")), typedlit(qq)).cast("long")
     // The 3-width sweep rides ONE width-tagged frame: 5 batched passes
     // (+1 entry materialization) instead of 15 (+3). Each pass expands,
     // scores and cuts every width in one materialization — widths never
@@ -1223,7 +1201,7 @@ object Vectors extends QueryModule {
     // (+1 entry materialization) instead of 10 (+2) — per-tag results
     // identical (see taggedBeamSearch).
     val qq  = queryQq(s, d)
-    val sim = VF.dot(quantArr(col("embedding")), typedlit(qq)).cast("long")
+    val sim = VF.dot(KnnGraphOps.quantArr(col("embedding")), typedlit(qq)).cast("long")
     val beams = graft.Tuning.boundedFrontierProfile(s) {
       taggedBeamSearch(e, nbrs, sim, K, JPasses)(graft.Lineage.truncate(
         e.join(broadcast(entryA), Seq("vec_id"))

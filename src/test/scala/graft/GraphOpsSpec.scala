@@ -171,7 +171,7 @@ class GraphOpsSpec extends AnyFunSuite with SparkTestBase {
     val qLpa   = GraphOps.modularity(und, labels)
     val pass1  = GraphOps.refineMerge(und, labels)
     val qPass1 = GraphOps.modularity(und, pass1)
-    val fixed  = GraphOps.refineMergeFixedPoint(und, labels, maxPasses = 4)
+    val fixed  = GraphOps.refineMergeFixedPoint(GraphOps.edgeFrame(und), labels, maxPasses = 4)
     val qFixed = GraphOps.modularity(und, fixed)
     // the CNM fixed point must fold every chain whole: within a chain any
     // adjacent fragment pair has gain 2·20·1 − d1·d2 with d1+d2 ≤ 8 ⇒
@@ -190,9 +190,9 @@ class GraphOpsSpec extends AnyFunSuite with SparkTestBase {
     // gain 10·8 − 7 = 73 folds it — the RB knob doing its one job
     val und    = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L)).toDF("a", "b")
     val labels = Seq(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L).toDF("id", "lbl")
-    val high = GraphOps.refineMergeFixedPoint(und, labels, 3, gammaNum = 2L, gammaDen = 1L)
+    val high = GraphOps.refineMergeFixedPoint(GraphOps.edgeFrame(und), labels, 3, gammaNum = 2L, gammaDen = 1L)
     assert(high.select("lbl").distinct().count() == 2, "γ=2.0 must keep the pendant split")
-    val low = GraphOps.refineMergeFixedPoint(und, labels, 3, gammaNum = 1L, gammaDen = 10L)
+    val low = GraphOps.refineMergeFixedPoint(GraphOps.edgeFrame(und), labels, 3, gammaNum = 1L, gammaDen = 10L)
     assert(low.select("lbl").distinct().count() == 1, "γ=0.1 must fold the pendant in")
   }
 
@@ -522,13 +522,13 @@ class GraphOpsSpec extends AnyFunSuite with SparkTestBase {
       val undDf = und.toDF("a", "b")
       val verts = (0L until n.toLong).toDF("id")
       val parent = GraphOps.refineMergeFixedPoint(
-        undDf,
+        GraphOps.edgeFrame(undDf),
         GraphOps.labelPropagation(
           verts, undDf.select(col("a").as("src"), col("b").as("dst")), 3),
         maxPasses = 4)
       val parentMap =
         parent.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val refined = GraphOps.refineWithinFixedPoint(undDf, parent, maxPasses = 6)
+      val refined = GraphOps.refineWithinFixedPoint(GraphOps.edgeFrame(undDf), parent, maxPasses = 6)
       val refinedMap =
         refined.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
@@ -560,7 +560,7 @@ class GraphOpsSpec extends AnyFunSuite with SparkTestBase {
 
       // 3. deterministic: a second run reproduces the partition exactly
       val again = GraphOps
-        .refineWithinFixedPoint(undDf, parent, maxPasses = 6)
+        .refineWithinFixedPoint(GraphOps.edgeFrame(undDf), parent, maxPasses = 6)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(again == refinedMap, s"seed $seed: nondeterministic refinement")
     }
@@ -580,12 +580,12 @@ class GraphOpsSpec extends AnyFunSuite with SparkTestBase {
     val verts = Seq(0L, 1L, 2L, 3L, 8L, 9L).toDF("id")
     val lpa = GraphOps.labelPropagation(
       verts, und.select(col("a").as("src"), col("b").as("dst")), 3)
-    val fixed = GraphOps.refineMergeFixedPoint(und, lpa, maxPasses = 4)
+    val fixed = GraphOps.refineMergeFixedPoint(GraphOps.edgeFrame(und), lpa, maxPasses = 4)
     val fixedMap =
       fixed.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // g8b's ladder keeps the dumbbell as ONE community (merge-only)
     assert(fixedMap.values.toSet.size == 1, s"expected one merged community, got $fixedMap")
-    val refined = GraphOps.refineWithinFixedPoint(und, fixed, maxPasses = 6)
+    val refined = GraphOps.refineWithinFixedPoint(GraphOps.edgeFrame(und), fixed, maxPasses = 6)
     val refinedMap =
       refined.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // refinement re-forms the clique and the tail as separate communities
@@ -614,8 +614,8 @@ class GraphOpsSpec extends AnyFunSuite with SparkTestBase {
     val verts       = (dumbbellIds ++ (12L to 24L)).toDF("id")
     val lpa = GraphOps.labelPropagation(
       verts, und.select(col("a").as("src"), col("b").as("dst")), 3)
-    val fixed   = GraphOps.refineMergeFixedPoint(und, lpa, maxPasses = 4)
-    val refined = GraphOps.refineWithinFixedPoint(und, fixed, maxPasses = 6)
+    val fixed   = GraphOps.refineMergeFixedPoint(GraphOps.edgeFrame(und), lpa, maxPasses = 4)
+    val refined = GraphOps.refineWithinFixedPoint(GraphOps.edgeFrame(und), fixed, maxPasses = 6)
     val refinedMap =
       refined.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // the split held: clique and tail carry different labels
@@ -629,6 +629,36 @@ class GraphOpsSpec extends AnyFunSuite with SparkTestBase {
       org.apache.spark.sql.functions
         .when(col("lbl") === 8L, 0L).otherwise(col("lbl")).as("lbl"))
     assert(GraphOps.modularity(und, glued) > GraphOps.modularity(und, refined))
+  }
+
+  test("a disjoint union batched through both fixed points matches each graph's solo run") {
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.col
+    // two triangles joined by a bridge (m = 7; the g20 plant) and the
+    // g8d ballast dumbbell (m = 20). Each graph's gains must use its own
+    // gm: priced with the union's 27, the triangles would glue
+    // (2·27·1 − 7·7 > 0) where their own m keeps them apart (14 − 49 < 0).
+    val triangles = Seq((0L, 1L), (0L, 2L), (1L, 2L), (3L, 4L), (3L, 5L), (4L, 5L), (2L, 3L))
+    val ballast = Seq((0L, 1L), (0L, 2L), (0L, 3L), (1L, 2L), (1L, 3L), (2L, 3L), (3L, 8L), (8L, 9L)) ++
+      (13L to 24L).map(k => (k - 1, k))
+    def ids(und: Seq[(Long, Long)]): Seq[Long] = und.flatMap { case (a, b) => Seq(a, b) }.distinct
+    def ladder(u: DataFrame, verts: Seq[Long]): Map[Long, Long] = {
+      val lpa = GraphOps.labelPropagation(
+        verts.toDF("id"), u.select(col("a").as("src"), col("b").as("dst")), 3)
+      val merged = GraphOps.refineMergeFixedPoint(u, lpa, maxPasses = 4)
+      GraphOps.refineWithinFixedPoint(u, merged, maxPasses = 6)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
+    val solo1 = ladder(GraphOps.edgeFrame(triangles.toDF("a", "b")), ids(triangles))
+    val solo2 = ladder(GraphOps.edgeFrame(ballast.toDF("a", "b")), ids(ballast))
+    assert(solo1(2L) != solo1(3L), s"the triangles stay apart solo: $solo1")
+    assert(solo2(8L) != solo2(0L), s"the gate holds the ballast split solo: $solo2")
+    val batch = (triangles.map { case (a, b) => (a, b, 1L, 7L) } ++
+      ballast.map { case (a, b) => (a + 1000, b + 1000, 1L, 20L) }).toDF("a", "b", "w", "gm")
+    val both = ladder(batch, ids(triangles) ++ ids(ballast).map(_ + 1000))
+    assert(both.filter(_._1 < 1000) == solo1)
+    assert(both.collect { case (v, l) if v >= 1000 => (v - 1000, l - 1000) } == solo2)
   }
 
   test("edge weights flip the cross-bridge merge the unweighted ladder refuses") {
@@ -651,8 +681,8 @@ class GraphOpsSpec extends AnyFunSuite with SparkTestBase {
     )
     def comms(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
       df.collect().map(r => r.getAs[Long]("id") -> r.getAs[Long]("lbl")).toMap
-    val unw = comms(GraphOps.refineMergeFixedPoint(und, lpa, 4, 1L, 1L))
-    val wtd = comms(GraphOps.refineMergeFixedPointWeighted(undW, lpa, 4, 1L, 1L))
+    val unw = comms(GraphOps.refineMergeFixedPoint(GraphOps.edgeFrame(und), lpa, 4, 1L, 1L))
+    val wtd = comms(GraphOps.refineMergeFixedPoint(GraphOps.edgeFrame(undW), lpa, 4, 1L, 1L))
     assert(unw(2L) != unw(3L), "unweighted must keep the triangles separate")
     assert(unw.values.toSet.size == 2)
     assert(wtd(2L) == wtd(3L), "the weight-20 bridge must glue the triangles")
