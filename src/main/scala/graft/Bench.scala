@@ -100,8 +100,8 @@ object Bench {
     // Untimed JIT warmup (r18 verdict #4): the family-sweep ladder's
     // first-touch cost measured ~100% shared JIT/driver planning, 0%
     // data-scale I/O — cold round 11.97 s → 4.18 s after one sf0.001
-    // pass through the SAME chain (BENCH_NOTES_r19.md:35-41; the warmup
-    // absorbs the tax at 1/100th the data). Paying it here, outside any
+    // pass through the SAME chain (receipts/BENCH_NOTES_r19.md:35-41; the
+    // warmup absorbs the tax at 1/100th the data). Paying it here, outside any
     // timed line, collapses the pass-1 spread the r18 benchmark run surfaced
     // (88.6 s on _sub_graph_3_family_sweep under driver-side CPU
     // contention, which amplifies cold JIT). Billed totals are unchanged —

@@ -14,9 +14,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     the ContextCleaner can reclaim their (local)checkpoint blocks/files —
   *     without it a long-lived session iterating datasets pins every
   *     materialized intermediate forever, and the measurement harnesses
-  *     (Soak/Bench) time a checkpoint READ on their second pass instead of
-  *     the query's actual compute. Soak clears before every timed cell;
-  *     Bench clears between its two interleaved passes.
+  *     (Bench/Profile) time a checkpoint READ on their second pass instead
+  *     of the query's actual compute. Bench clears between its two
+  *     interleaved passes; Profile clears before each of its rounds.
   *   - **A measurement bypass.** [[bypass]] disables memo lookup AND the
   *     memo-level lineage truncation for the OUTERMOST cached call on the
   *     current thread, so a plan census sees the query's real join tree

@@ -27,7 +27,7 @@ object Tuning {
     // the per-pass broadcast-build jobs (48→37 jobs on the g4 sweep
     // prefix) but the replacement single-partition SMJs add interpreted
     // sort+exchange stages (105→113) and the warm chain got SLOWER
-    // (5.67 s → 6.41 s, warm round 2; OPTIMIZATION_r20.md:150-162).
+    // (5.67 s → 6.41 s, warm round 2; receipts/OPTIMIZATION_r20.md:150-162).
     // Broadcasts stay.
   )
 

@@ -452,7 +452,7 @@ object GraphOps {
     *   1. merges stay INSIDE the parent community — the refined partition
     *      always refines `parent`;
     *   2. the WELL-CONNECTEDNESS gate: a sub-community R ⊆ C may take part
-    *      in a merge only while gateDen·E(R, C∖R) ≥ gateNum·‖R‖·(‖C‖−‖R‖)
+    *      in a merge only while 6·E(R, C∖R) ≥ ‖R‖·(‖C‖−‖R‖)
     *      (vertex-count form of the paper's γ-connectivity bound). A
     *      badly-connected R — e.g. a blob attached to the rest of its
     *      community by a single bridge edge — fails the gate and is FROZEN,
@@ -489,8 +489,6 @@ object GraphOps {
       maxPasses: Int = 6,
       gammaNum: Long = 1L,
       gammaDen: Long = 1L,
-      gateNum: Long = 1L,
-      gateDen: Long = 6L,
       deg: Option[DataFrame] = None,
       probe: Boolean = true
   ): DataFrame = {
@@ -583,7 +581,7 @@ object GraphOps {
       // E(R, C∖R) rides the mirrored frame as two window sums (the c1-side
       // window runs last so the picks window below reuses its
       // partitioning), and the well-connectedness gate
-      // (gateD·cut ≥ gateN·sz·(psz−sz)) filters rows directly. A
+      // (6·cut ≥ sz·(psz−sz)) filters rows directly. A
       // sub-community with no intra-parent neighbors has no inter rows —
       // eligible but partnerless under both shapes.
       val wc1 = org.apache.spark.sql.expressions.Window.partitionBy(col("c1"))
@@ -592,10 +590,10 @@ object GraphOps {
         .withColumn("cut2", sum(col("e12")).over(wc2))
         .withColumn("cut1", sum(col("e12")).over(wc1))
         .filter(
-          lit(gateDen) * col("cut1") >= lit(gateNum) * col("sz1") * (col("psz") - col("sz1"))
+          lit(6L) * col("cut1") >= col("sz1") * (col("psz") - col("sz1"))
         )
         .filter(
-          lit(gateDen) * col("cut2") >= lit(gateNum) * col("sz2") * (col("psz") - col("sz2"))
+          lit(6L) * col("cut2") >= col("sz2") * (col("psz") - col("sz2"))
         )
         .withColumn("gain", gain(gammaNum, gammaDen, "d1", "d2"))
       // mutual pairs only (disjoint, src < dst — so only the dst side

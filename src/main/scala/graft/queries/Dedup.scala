@@ -64,28 +64,6 @@ object Dedup extends QueryModule {
       )
   }
 
-  /** Soak diagnostic (r9 verdict #2): the candidate-join size the d-family
-    * commits to on a given corpus, priced from bucket occupancy alone —
-    * the d15 audit evaluated at d1's production banding. Returns
-    * (raw_pairs = Σ C(occupancy, 2), hot_buckets, max_bucket): raw_pairs
-    * IS the band-key equi-join's output size, so comparing it at 1× vs N×
-    * separates engine scaling (join cost ∝ raw_pairs) from corpus
-    * semantics (how many near-dup siblings the data actually contains).
-    * One bounded single-row collect — a diagnostic, not an operator.
-    */
-  private[graft] def candidateDiagnostics(s: SparkSession, d: String): (Long, Long, Long) = {
-    val row = MH.bandKeys(corpus(s, d))
-      .groupBy(col("band"), col("bkey"))
-      .agg(count(lit(1)).as("n"))
-      .agg(
-        coalesce(sum(expr("n * (n - 1) div 2")), lit(0L)).as("raw_pairs"),
-        coalesce(sum(when(col("n") > 1, 1L).otherwise(0L)), lit(0L)).as("hot"),
-        coalesce(max(col("n")), lit(0L)).as("mx")
-      )
-      .collect()(0)
-    (row.getLong(0), row.getLong(1), row.getLong(2))
-  }
-
   /** LSH candidate pairs from a band-key table (d1's join body). */
   private def candidatePairs(bands: DataFrame): DataFrame = {
     val a = bands.as("a")
@@ -1080,7 +1058,7 @@ object Dedup extends QueryModule {
     * the way a production system actually assigns when k ∝ n: Jégou–
     * Douze–Schmid 2011's coarse-quantizer routing applied to the
     * CLUSTERING side of the house, closing the caveat
-    * SOAK_DELTA_r16_16x.md declares on d21's brute-force assignment).
+    * receipts/SOAK_DELTA_r16_16x.md declares on d21's brute-force assignment).
     * Brute assignment is Θ(n·k) distance evaluations — itself quadratic
     * once k scales with n for constant occupancy. Here a vector first
     * picks the nearest of c COARSE seeds, then refines only among the

@@ -1846,20 +1846,11 @@ object GraphQueries extends QueryModule {
     * serial argument, same as g8c).
     */
   private def g15_harmonic_centrality(s: SparkSession, d: String): DataFrame = {
-    val n = table(s, d, "nation")
-    val w = Window.partitionBy(col("n_regionkey")).orderBy(col("n_nationkey"))
-    val chain = n
-      .select(col("n_nationkey").as("src"), lead(col("n_nationkey"), 1).over(w).as("dst"))
-      .filter(col("dst").isNotNull)
-    val rw = Window.orderBy(col("n_regionkey"))
-    val bridges = n
-      .groupBy(col("n_regionkey"))
-      .agg(min(col("n_nationkey")).as("mn"), max(col("n_nationkey")).as("mx"))
-      .select(col("mx").as("src"), lead(col("mn"), 1).over(rw).as("dst"))
-      .filter(col("dst").isNotNull)
-    val und = chain.unionByName(bridges)
-    val sym = und.unionByName(und.select(col("dst").as("src"), col("src").as("dst")))
-    val seeds = n
+    val (_, und) = bridgedNationUnd(s, d)
+    val sym = und
+      .select(col("a").as("src"), col("b").as("dst"))
+      .unionByName(und.select(col("b").as("src"), col("a").as("dst")))
+    val seeds = table(s, d, "nation")
       .groupBy(col("n_regionkey"))
       .agg(min(col("n_nationkey")).as("seed"))
       .select(col("seed"), col("seed").as("id"), lit(0L).as("hop"))

@@ -400,8 +400,7 @@ object Multimodal extends QueryModule {
     // images carries no near-dup signal (it is a degenerate/boilerplate
     // pattern) and is dropped BEFORE the pair join, bounding candidate
     // output at Σ C(min(occ,64), 2) ≤ 32·|band rows| — linear in corpus
-    // size. [[phashBandDiagnostics]] measures the Σ C(occ,2) census the
-    // soak prints alongside the d-family's.
+    // size.
     val okBuckets = bands
       .groupBy(col("band"), col("key"))
       .agg(count(lit(1)).as("occ"))
@@ -430,37 +429,6 @@ object Multimodal extends QueryModule {
       )
       .filter(col("hamming") <= 6)
       .select(col("doc1"), col("doc2"), col("hamming"))
-  }
-
-  /** Σ C(occ, 2) census over m10's (band, key) buckets — the measured
-    * quadratic term the r11 advice asked for (candidate pairs the band
-    * join would emit WITHOUT the occupancy cap), plus hot-bucket count
-    * (occ > 1) and max occupancy. Printed by Soak next to the d-family
-    * candidate diagnostic so the scale claim is a measurement, not an
-    * assumption.
-    */
-  def phashBandDiagnostics(s: SparkSession, d: String): (Long, Long, Long) = {
-    val docs = table(s, d, "documents")
-    val a    = docs.select(col("doc_id"), col("doc_id").as("src"), lit(false).as("pert"))
-    val b =
-      docs.select((-col("doc_id") - 1).as("doc_id"), col("doc_id").as("src"), lit(true).as("pert"))
-    // graft_phash_bits/graft_band_keys — see m10 (value-pinned fused kernels)
-    val row = a
-      .unionByName(b)
-      .withColumn(
-        "bits",
-        expr("graft_phash_bits(src, IF(pert, cast(src % 64 AS int), -1))"))
-      .select(col("doc_id"), posexplode(expr("graft_band_keys(bits)")))
-      .select(col("pos").as("band"), col("col").as("key"))
-      .groupBy(col("band"), col("key"))
-      .agg(count(lit(1)).as("occ"))
-      .agg(
-        sum(expr("occ * (occ - 1) div 2")).as("cand_pairs"),
-        sum(when(col("occ") > 1, 1L).otherwise(0L)).as("hot_buckets"),
-        max(col("occ")).as("max_occ")
-      )
-      .head()
-    (row.getAs[Long]("cand_pairs"), row.getAs[Long]("hot_buckets"), row.getAs[Long]("max_occ"))
   }
 
   /** M11 — banded-Hamming RECALL AUDIT (d18's discipline for the image

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The cross-query memo registry's contract (Memo.scala): materialize-once
-  * sharing, explicit invalidation, and the measurement bypass the soak's
-  * honest timing/census depends on.
+  * sharing, explicit invalidation, and the measurement bypass a plan
+  * census depends on.
   */
 class MemoSpec extends AnyFunSuite with SparkTestBase {
 
