@@ -23,16 +23,19 @@ import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, FloatType, In
   * Scale notes: every writer goes through Spark's commit protocol (task
   * attempts + job commit → readers never see partial output — the moral
   * equivalent of the reference's temp-file+rename, but correct under
-  * distributed retries). Row counts come from a post-commit metadata-only
-  * scan (parquet footer count pushdown — no data read).
+  * distributed retries). Row counts are summed on the driver from the
+  * footers of the committed part files, one footer read per file; no
+  * Spark job and no data page is read.
   */
 object TableIO {
 
-  /** S1 — overwrite Parquet sink; returns the committed row count
-    * (metadata-only footer count, as the reference records row_count
-    * metadata). The job writes to a sibling `._tmp` staging path and only
-    * then swaps it into place, mirroring the reference io_manager's
-    * temp-file+rename: a mid-job failure leaves the previous data intact
+  /** S1 — overwrite Parquet sink; returns the committed row count, as the
+    * reference records row_count metadata: the sum of the row counts in
+    * the footers of the committed part files, read on the driver (one
+    * footer per file, no Spark job). The job writes to a sibling `._tmp`
+    * staging path and only then swaps it into place, mirroring the
+    * reference io_manager's temp-file+rename: a mid-job failure leaves the
+    * previous data intact
     * (plain `mode("overwrite")` deletes the target before the job runs, so
     * a crash would leave the path empty). The swap parks the previous data
     * at a `._old` sibling rather than deleting it up front, so the target
@@ -49,8 +52,27 @@ object TableIO {
     val fs      = target.getFileSystem(conf)
     df.write.mode("overwrite").parquet(staging.toString)
     promote(fs, staging, target)
-    df.sparkSession.read.parquet(path).count()
+    footerRowCount(fs, conf, target)
   }
+
+  /** Rows in a flat parquet table dir, summed from the part-file footers.
+    * Hidden files (`_SUCCESS`, `.crc` checksums) are skipped, as Spark's
+    * listing skips them.
+    */
+  private def footerRowCount(
+      fs: org.apache.hadoop.fs.FileSystem,
+      conf: org.apache.hadoop.conf.Configuration,
+      dir: org.apache.hadoop.fs.Path
+  ): Long =
+    fs.listStatus(dir)
+      .filter(f => f.isFile && !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
+      .map { f =>
+        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf)
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+        try reader.getRecordCount
+        finally reader.close()
+      }
+      .sum
 
   /** The swap leg of the staged write: park the previous data at a `._old`
     * sibling, promote the staging dir, drop the parked copy only once the

@@ -939,16 +939,20 @@ object Dedup extends QueryModule {
     * Reference anchor: the corpus ingest dedups exact ids only
     * (utils/chroma_helpers.py:111-124) — this is its semantic upgrade.
     */
-  private def d21_semdedup(s: SparkSession, d: String): DataFrame =
-    semDedup(s, d, k = 8)
+  private def d21_semdedup(s: SparkSession, d: String): DataFrame = {
+    val ve = plantedEmbeddings(s, d)
+    // the k = 8 seeds are the first 8 stored vectors
+    val seeds = ve.filter(col("vec_id").between(0, 7)).select(col("vec_id").as("seed"), col("e").as("se"))
+    val assign = graft.Lineage.truncate(
+      ve.crossJoin(broadcast(seeds))
+        .select(col("vec_id"), col("seed"), expr(qd2.format("e", "se")).as("sd2"))
+        .groupBy(col("vec_id"))
+        .agg(min(struct(col("sd2"), col("seed"))).as("m"))
+        .select(col("vec_id"), col("m.seed").as("cluster"))
+    )
+    semDedupPipeline(ve, assign)
+  }
 
-  /** [[d21_semdedup]] with the SemDeDup cluster count as a real parameter
-    * (r15 verdict #3): seeds are the first `k` stored vectors, so the
-    * registered query's k = 8 stays byte-identical while the soak ladder
-    * can run k ∝ replica-factor — constant target occupancy, the paper's
-    * production configuration where Σ occ² ≈ n·occ keeps the
-    * within-cluster pair stage LINEAR in the corpus instead of quadratic.
-    */
   /** The quantized squared-L2 expression template shared by the d21
     * family (brute and IVF-routed assignment).
     */
@@ -979,25 +983,11 @@ object Dedup extends QueryModule {
     )
   }
 
-  def semDedup(s: SparkSession, d: String, k: Int): DataFrame = {
-    require(k >= 1, s"semDedup needs k >= 1, got $k")
-    val ve = plantedEmbeddings(s, d)
-    val seeds = ve.filter(col("vec_id").between(0, k - 1)).select(col("vec_id").as("seed"), col("e").as("se"))
-    val assign = graft.Lineage.truncate(
-      ve.crossJoin(broadcast(seeds))
-        .select(col("vec_id"), col("seed"), expr(qd2.format("e", "se")).as("sd2"))
-        .groupBy(col("vec_id"))
-        .agg(min(struct(col("sd2"), col("seed"))).as("m"))
-        .select(col("vec_id"), col("m.seed").as("cluster"))
-    )
-    semDedupPipeline(ve, assign)
-  }
-
   /** Everything in SemDeDup AFTER cluster assignment — integer centroids,
     * centroid distances, the gated within-cluster pair join, CC over pair
     * endpoints, and the edge-of-cluster keep rule — shared verbatim by the
-    * brute-force assignment ([[semDedup]]) and the IVF-routed one
-    * ([[semDedupIvf]]), so the two variants differ ONLY in how a vector
+    * brute-force assignment ([[d21_semdedup]]) and the IVF-routed one
+    * ([[d21b_semdedup_ivf]]), so the two variants differ ONLY in how a vector
     * finds its cluster.
     */
   private def semDedupPipeline(ve: DataFrame, assign: DataFrame): DataFrame = {
@@ -1075,17 +1065,14 @@ object Dedup extends QueryModule {
     * pair join, CC, the edge-of-cluster keeper — is [[semDedupPipeline]],
     * shared verbatim with d21. Argmins are min(struct(d2, id)): the
     * lexicographic (distance, id) tiebreak both engines share. Fine seeds
-    * are the first k stored vectors, coarse the first c — so every coarse
-    * cell is non-empty (seed i < c routes to itself at distance 0).
+    * are the first k = 16 stored vectors, coarse the first c = 4 — so
+    * every coarse cell is non-empty (seed i < c routes to itself at
+    * distance 0).
     */
-  private def d21b_semdedup_ivf(s: SparkSession, d: String): DataFrame =
-    semDedupIvf(s, d, k = 16, c = 4)
-
-  def semDedupIvf(s: SparkSession, d: String, k: Int, c: Int): DataFrame = {
-    require(k >= c && c >= 1, s"semDedupIvf needs k >= c >= 1, got k=$k c=$c")
+  private def d21b_semdedup_ivf(s: SparkSession, d: String): DataFrame = {
     val ve     = plantedEmbeddings(s, d)
-    val fines  = ve.filter(col("vec_id").between(0, k - 1)).select(col("vec_id").as("seed"), col("e").as("se"))
-    val coarse = ve.filter(col("vec_id").between(0, c - 1)).select(col("vec_id").as("cs"), col("e").as("ce"))
+    val fines  = ve.filter(col("vec_id").between(0, 15)).select(col("vec_id").as("seed"), col("e").as("se"))
+    val coarse = ve.filter(col("vec_id").between(0, 3)).select(col("vec_id").as("cs"), col("e").as("ce"))
     // route each fine seed to its coarse cell (k×c — codebook-sized work)
     val routed = fines
       .crossJoin(broadcast(coarse))

@@ -654,8 +654,10 @@ object StreamOps {
         val indexDups =
           if (!exists(s"$indexPath/bands")) noIds
           else {
-            val iBands = spark.read.parquet(s"$indexPath/bands")
-            val iSh    = spark.read.parquet(s"$indexPath/shingles")
+            // the index is written from bBands and bSh below: reading with
+            // their schemas spares each micro-batch two inference jobs
+            val iBands = spark.read.schema(bBands.schema).parquet(s"$indexPath/bands")
+            val iSh    = spark.read.schema(bSh.schema).parquet(s"$indexPath/shingles")
             val cand = bBands
               .as("a")
               .join(iBands.as("b"), col("a.bkey") === col("b.bkey") && col("a.band") === col("b.band"))

@@ -6,6 +6,7 @@ import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.graft.ListenerBusDrain
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 
@@ -15,7 +16,10 @@ import graft.{Engine, Lineage, Memo, SparkEntry}
   * into Spark-job time and driver time, and counts the pass units (the
   * [[Lineage.truncate]]/[[Lineage.cachePin]] executions captured by the
   * Lineage hook) with their Catalyst planning time, so a slow line reads as
-  * pass count × per-pass planning or as executor work.
+  * pass count × per-pass planning or as executor work. `compiles` counts
+  * the generated classes Janino compiled during the call (JVM-wide, from
+  * Spark's codegen metrics): classes the codegen cache already held cost
+  * nothing, the rest cost driver time outside the tracked plan phases.
   *
   * Usage: `sbt "runMain graft.tools.Profile <sfDir> <name>..."`, each name a
   * `SparkEntry.queries` key or a `SparkEntry.substrates` `_sub_*` name. Each
@@ -27,14 +31,15 @@ object Profile {
 
   final case class Stats(
       wallS: Double, jobs: Long, stages: Long, tasks: Long, jobS: Double, taskS: Double,
-      shuffleMb: Double, spillMb: Double, peakStorageMb: Double, passUnits: Int, planMs: Long) {
+      shuffleMb: Double, spillMb: Double, peakStorageMb: Double, passUnits: Int, planMs: Long,
+      compiles: Long) {
     def driverS: Double = wallS - jobS
 
     def json(name: String, round: Int): String =
       f"""{"name":"$name","round":$round,"wall_s":$wallS%.3f,"jobs":$jobs,"stages":$stages,""" +
         f""""tasks":$tasks,"job_s":$jobS%.3f,"driver_s":$driverS%.3f,"task_s":$taskS%.3f,""" +
         f""""shuffle_mb":$shuffleMb%.1f,"spill_mb":$spillMb%.1f,"peak_storage_mb":$peakStorageMb%.1f,""" +
-        s""""pass_units":$passUnits,"plan_ms":$planMs}"""
+        s""""pass_units":$passUnits,"plan_ms":$planMs,"compiles":$compiles}"""
   }
 
   private val MB = 1048576.0
@@ -93,7 +98,9 @@ object Profile {
     Lineage.captureClear()
     Lineage.captureStart("profile")
     var units = Seq.empty[org.apache.spark.sql.execution.QueryExecution]
-    val t0    = System.nanoTime()
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME
+    val c0       = compiled.getCount
+    val t0       = System.nanoTime()
     val wallS =
       try { f; (System.nanoTime() - t0) / 1e9 }
       finally {
@@ -103,9 +110,11 @@ object Profile {
         ListenerBusDrain(sc)
         sc.removeSparkListener(rec)
       }
-    val planMs = units.map(_.tracker.phases.values.map(_.durationMs).sum).sum
+    val compiles = compiled.getCount - c0
+    val planMs   = units.map(_.tracker.phases.values.map(_.durationMs).sum).sum
     Stats(wallS, rec.jobs.get, rec.stages.get, rec.tasks.get, rec.jobSeconds, rec.taskMs.get / 1e3,
-      rec.shuffleB.get / MB, rec.spillB.get / MB, rec.peakStored.get / MB, units.size, planMs)
+      rec.shuffleB.get / MB, rec.spillB.get / MB, rec.peakStored.get / MB, units.size, planMs,
+      compiles)
   }
 
   def main(args: Array[String]): Unit = {

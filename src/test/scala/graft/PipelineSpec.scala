@@ -45,4 +45,19 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     val (counts2, _) = Pipeline.run(spark, "/root/testdata/sf0.001", out)
     assert(counts2 == counts)
   }
+
+  test("the quality report reads one aggregate chain: five checks, in order, in at most 5 jobs") {
+    import spark.implicits._
+    val index = Seq(("u1", "a", "2001"), ("u2", "b", null), ("u2", "b", null), (null, "c", "2003"))
+      .toDF("artist_uri", "name", "start_date")
+    var rows: Array[org.apache.spark.sql.Row] = null
+    val jobs = jobsOf { rows = graft.pipeline.Checks.artistIndexReport(index).collect() }
+    assert(jobs <= 5, jobs)
+    assert(rows.map(r => (r.getString(0), r.getDouble(1), r.getBoolean(2))).toSeq == Seq(
+      ("row_count", 4.0, true),
+      ("null_ids", 1.0, false),
+      ("dup_rows", 2.0, false),
+      ("unique_uri_ratio", 0.5, false),
+      ("date_completeness", 0.5, false)))
+  }
 }

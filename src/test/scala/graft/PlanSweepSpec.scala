@@ -52,7 +52,6 @@ class PlanSweepSpec extends AnyFunSuite with SparkTestBase {
     "g7_modularity"          -> 1L, // single-row m / sum_d2 scalar broadcasts
     "g8_refined_modularity"  -> 1L, // single-row before/after numerator broadcasts
     "g8b_refined_fixed_point" -> 1L, // single-row LPA/pass1/fixed-point numerator broadcasts
-    "pl4_check_report"       -> 8L, // ≤8-row check-report spine
     "x9_tfidf_topk"          -> 1L, // single-row n_docs broadcast
     "x10_hll_registers"      -> 1L, // single-row harmonic-sum broadcast
     "x12_cmsketch_registers" -> 1L, // single-row totals broadcast
@@ -141,7 +140,7 @@ class PlanSweepSpec extends AnyFunSuite with SparkTestBase {
     * frame in this suite's alphabetical order.
     */
   private val truncatedBnljBounded: Map[String, Long] = Map(
-    "d21_semdedup"           -> 8L,  // the k = 8 SemDeDup seed-vector broadcast (Dedup.semDedup)
+    "d21_semdedup"           -> 8L,  // the k = 8 SemDeDup seed-vector broadcast (Dedup.d21_semdedup)
     "d21b_semdedup_ivf"      -> 16L, // coarse codebook (4 rows) + routed fine-seed table (16 rows)
     "g20_weighted_modularity" -> 8L, // per-pass scalar spine (m + numerators; measured 3 rows)
     "g4_summary_stub"        -> 8L,  // familySweep per-copy scalar spine, ≤5 nation copies (measured 4)

@@ -29,6 +29,31 @@ class TableIOSpec extends AnyFunSuite with SparkTestBase {
     assert(spark.read.parquet(s"$tmp/p2").head.getLong(0) == 9L)
   }
 
+  test("the footer row count equals a Spark count: empty, three files, overwrite") {
+    import spark.implicits._
+    def sparkCount(p: String) = spark.read.parquet(p).count()
+    val empty = Seq.empty[(Long, String)].toDF("id", "v")
+    assert(TableIO.writeParquet(empty, s"$tmp/f0") == sparkCount(s"$tmp/f0"))
+    assert(sparkCount(s"$tmp/f0") == 0)
+
+    val three = (1L to 10L).map(i => (i, s"v$i")).toDF("id", "v").repartition(3)
+    assert(TableIO.writeParquet(three, s"$tmp/f3") == 10)
+    assert(sparkCount(s"$tmp/f3") == 10)
+    val parts = new java.io.File(s"$tmp/f3").list().filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
+    assert(parts.length == 3, parts.toSeq)
+
+    val n = TableIO.writeParquet(Seq((7L, "x"), (8L, "y")).toDF("id", "v").repartition(2), s"$tmp/f3")
+    assert(n == 2 && sparkCount(s"$tmp/f3") == 2)
+  }
+
+  test("the staged write starts no more Spark jobs than a plain parquet write") {
+    import spark.implicits._
+    val df     = (1L to 100L).map(i => (i, s"v$i")).toDF("id", "v").repartition(3)
+    val plain  = jobsOf(df.write.mode("overwrite").parquet(s"$tmp/plain"))
+    val staged = jobsOf(TableIO.writeParquet(df, s"$tmp/staged"))
+    assert(staged <= plain, s"staged $staged vs plain $plain")
+  }
+
   test("sparse JSONL drops null fields on disk but schema'd read restores them") {
     import spark.implicits._
     val df = Seq((1L, Some("x")), (2L, None)).toDF("id", "opt")
